@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .embedding import cosine_expr
+from .similarity import _hyperplane_keys, _self_join_candidates
 
 CLUSTER_SCHEMA = "vec_id long, cluster long"
 
@@ -87,48 +88,6 @@ def dbscan_exact(vectors: DataFrame, eps: float = 0.325, min_samples: int = 75) 
         .groupBy("__g")
         .applyInPandas(run, CLUSTER_SCHEMA)
     )
-
-
-def _lsh_plane_matrix(n_planes: int, seed: int, dim: int, dist: str) -> np.ndarray:
-    """Hyperplane components. ``gaussian``: seeded standard normals (the
-    default). ``rademacher_md5``: ±1 from the low bit of
-    md5(f"{seed}:{plane}:{dim_index}") — sign-hash quality is equivalent
-    for cosine LSH (Achlioptas-style sparse/±1 projections), and the
-    construction is DuckDB-reproducible, which lets the driver's
-    recall_audit oracle recompute the buckets exactly."""
-    if dist == "rademacher_md5":
-        import hashlib
-
-        return np.array(
-            [
-                [
-                    1.0 if int(hashlib.md5(f"{seed}:{p}:{j}".encode()).hexdigest()[0], 16) & 1
-                    else -1.0
-                    for j in range(dim)
-                ]
-                for p in range(n_planes)
-            ]
-        )
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((n_planes, dim))
-
-
-def _lsh_buckets(
-    df: DataFrame, vec_col: str, n_planes: int, seed: int, dim: int,
-    dist: str = "gaussian",
-) -> DataFrame:
-    """Random-hyperplane LSH signature as a JVM-side expression: sign of
-    dot(vec, plane) per plane, concatenated. Planes are deterministic
-    literals (seeded numpy or md5-derived ±1, broadcast as array
-    literals)."""
-    planes = _lsh_plane_matrix(n_planes, seed, dim, dist)
-    bits = []
-    for p in planes:
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        dot = F.aggregate(F.zip_with(F.col(vec_col), plane, lambda x, y: x * y),
-                          F.lit(0.0), lambda a, v: a + v)
-        bits.append(F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return df.withColumn("bucket", F.concat(*bits))
 
 
 def connected_components(edges: DataFrame, max_iters: int = 20) -> DataFrame:
@@ -234,30 +193,18 @@ def dbscan_scalable(
     tests compare against ``dbscan_exact`` on inputs where buckets are
     generous (few planes).
     """
-    v = vectors.select("vec_id", F.col("vec").cast("array<double>").alias("vec"))
-    tables = []
-    for t in range(3):  # 3 independent hash tables
-        tables.append(
-            _lsh_buckets(v, "vec", n_planes, seed + 1000 * t, dim)
-            .withColumn("table", F.lit(t))
-        )
-    bucketed = tables[0]
-    for t in tables[1:]:
-        bucketed = bucketed.unionByName(t)
-    a = bucketed.alias("a")
-    b = bucketed.alias("b")
+    v = vectors.select(F.col("vec_id").alias("id"), F.col("vec").cast("array<double>").alias("vec"))
+    seeds = [seed + 1000 * t for t in range(3)]  # 3 independent hash tables
+    dist = (1.0 - cosine_expr(F.col("a.vec"), F.col("b.vec"))).alias("dist")
     pairs = (
-        a.join(b, ["table", "bucket"])
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-        .select(
-            F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst"),
-            (1.0 - cosine_expr(F.col("a.vec"), F.col("b.vec"))).alias("dist"),
+        _self_join_candidates(
+            _hyperplane_keys(v, "vec", seeds, n_planes, dim), ["table", "key"],
+            pair_cols=(dist,), where=F.col("dist") <= eps,
         )
-        .filter(F.col("dist") <= eps)
-        .dropDuplicates(["src", "dst"])
+        .select(F.col("a").alias("src"), F.col("b").alias("dst"), "dist")
         .persist()
     )
-    return dbscan_from_edges(v.select("vec_id"), pairs, min_samples)
+    return dbscan_from_edges(v.select(F.col("id").alias("vec_id")), pairs, min_samples)
 
 
 def dbscan_from_edges(ids: DataFrame, pairs: DataFrame, min_samples: int) -> DataFrame:

@@ -1,18 +1,29 @@
 """Deduplication family for large-scale training-data pipelines.
 
-Five dedup strategies over a document table ``(doc_id, text)``:
+Near-dup pair producers over a document table ``(doc_id, text)``, plus
+the steps around them:
 
-* ``exact_dedup``          — hash-groupBy on sha2(text); pure SQL.
-* ``minhash_lsh_dedup``    — shingle -> minhash signature -> band buckets
-                             -> bucket join -> Jaccard verify. The classic
-                             MinHash+LSH near-dup (Broder; used by every
-                             web-scale corpus pipeline).
-* ``simhash_dedup``        — 64-bit SimHash (Charikar) with Hamming verify,
-                             blocked on >=16-bit block-combination keys
-                             (``simhash_band_spec``).
-* ``ngram_jaccard_dedup``  — exact n-gram Jaccard on candidate pairs
-                             (blocked by a cheap key to avoid O(n²)).
-* ``embedding_neardup``    — cosine >= threshold over an embedding column.
+* ``exact_dedup``             — hash-groupBy on sha2(text); pure SQL.
+* ``minhash_lsh_pairs``       — shingle -> minhash signature -> band buckets
+                                -> bucket join -> Jaccard verify. The classic
+                                MinHash+LSH near-dup (Broder; used by every
+                                web-scale corpus pipeline);
+                                ``minhash_lsh_dedup`` keeps the survivors.
+* ``simhash_pairs``           — 64-bit SimHash (Charikar) with Hamming verify,
+                                blocked on >=16-bit block-combination keys
+                                (``simhash_band_spec``).
+* ``ngram_jaccard_pairs``     — exact n-gram Jaccard: prefix-filtered
+                                candidates, exact verify.
+* ``embedding_neardup_pairs`` — cosine >= threshold over an embedding column,
+                                random-hyperplane blocked
+                                (``embedding_pairs_exact`` is its oracle).
+* ``neardup_keep`` / ``contamination_flags`` — pairs -> one survivor per
+  cluster; n-gram overlap with a benchmark corpus.
+
+Every pair producer gets its candidates from one shared core in
+``similarity``: ``_self_join_candidates`` (the guarded bucket self-join,
+observable through ``capped_stats``) over a banded table, with hyperplane
+tables keyed by ``_hyperplane_keys``. Verification stays in each producer.
 
 All hashing is seeded/deterministic (xxhash64 JVM-side where possible, md5
 in pandas UDFs) — never Python ``hash``. Signatures are computed
@@ -30,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .embedding import cosine_expr
+from .similarity import _CAP_STATS, _hyperplane_keys, _self_join_candidates
 
 
 def _tokens(col):
@@ -150,7 +162,7 @@ def minhash_lsh_pairs(
     globally-minimal stop-shingle hash lands MANY docs in one bucket and
     the band self-join goes quadratic in that bucket at corpus scale.
     Buckets larger than the cap are dropped from the candidate join
-    (mirroring the df>1000 guard in ``ngram_jaccard_pairs``). A pair that
+    (``similarity._self_join_candidates``' guard). A pair that
     ONLY collides in capped buckets is missed — but at b bands each true
     pair has b independent collision chances, so the residual miss
     probability stays near the banding S-curve; the cap only binds on
@@ -160,10 +172,10 @@ def minhash_lsh_pairs(
     Per the repo's no-silent-caps convention (r03 ADVICE low #1): pass a
     dict as ``capped_stats`` and it is filled with
     ``{"dropped_buckets": int, "dropped_rows": int}`` — how often and how
-    hard the cap actually bound on this corpus. Costs one eager extra job
-    over the banding lineage (signatures come from the persisted ``base``
-    cache; the hot-bucket table itself is persisted so the anti-join
-    reuses it); the default path stays fully lazy.
+    hard the cap actually bound on this corpus. Costs one eager aggregate
+    job over the banding lineage (signatures come from the persisted
+    ``base`` cache) that returns one row, however many buckets are hot;
+    the default path stays fully lazy.
 
     ``broadcast_verify``: the verify step attaches both shingle-hash
     arrays to each candidate pair — two joins that, as sort-merge, each
@@ -207,41 +219,8 @@ def minhash_lsh_pairs(
             )
         ).alias("bb"),
     ).select("id", "bb.band", "bb.bucket")
-    if max_bucket_size is not None:
-        hot_buckets = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_bucket_size)
-        )
-        if capped_stats is not None:
-            # one eager job over the (tiny — hot buckets are by definition
-            # few) table, then rebuild it as a literal DataFrame for the
-            # anti-join: no lingering persist to leak cached blocks for the
-            # session lifetime (r04 ADVICE low #2), and the anti-join side
-            # broadcasts for free. The banding lineage the job reads
-            # re-derives from the persisted `base` signatures, not raw text.
-            rows = hot_buckets.collect()
-            capped_stats["dropped_buckets"] = len(rows)
-            capped_stats["dropped_rows"] = int(sum(r["n"] for r in rows))
-            if rows:
-                hot_lit = docs.sparkSession.createDataFrame(
-                    [(r["band"], r["bucket"]) for r in rows], "band int, bucket long"
-                )
-                banded = banded.join(F.broadcast(hot_lit), ["band", "bucket"], "left_anti")
-        else:
-            banded = banded.join(
-                hot_buckets.select("band", "bucket"), ["band", "bucket"], "left_anti"
-            )
-    elif capped_stats is not None:
-        capped_stats["dropped_buckets"] = 0
-        capped_stats["dropped_rows"] = 0
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("a"), F.col("b.id").alias("b"))
-        .dropDuplicates(["a", "b"])
+    cand = _self_join_candidates(
+        banded, ["band", "bucket"], max_bucket_size, capped_stats, _CAP_STATS[:2]
     )
     # verify payload: the shingle-hash arrays as-is — 64-bit longs, so the
     # candidate join shuffles compact arrays, and set Jaccard over them
@@ -475,37 +454,7 @@ def simhash_pairs_from_hashes(
             ).alias("key"),
         )
     )
-    if max_bucket_size is not None:
-        hot = (
-            banded.groupBy("key")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_bucket_size)
-        )
-        if capped_stats is not None:
-            rows = hot.collect()
-            capped_stats["dropped_buckets"] = len(rows)
-            capped_stats["dropped_rows"] = int(sum(r["n"] for r in rows))
-            capped_stats["max_possible_pairs_dropped"] = int(
-                sum(r["n"] * (r["n"] - 1) // 2 for r in rows)
-            )
-            if rows:
-                hot_lit = hashed.sparkSession.createDataFrame(
-                    [(r["key"],) for r in rows], "key long"
-                )
-                banded = banded.join(F.broadcast(hot_lit), ["key"], "left_anti")
-        else:
-            banded = banded.join(hot.select("key"), ["key"], "left_anti")
-    elif capped_stats is not None:
-        capped_stats["dropped_buckets"] = 0
-        capped_stats["dropped_rows"] = 0
-        capped_stats["max_possible_pairs_dropped"] = 0
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(b, ["key"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("a"), F.col("b.id").alias("b"))
-        .dropDuplicates(["a", "b"])
-    )
+    cand = _self_join_candidates(banded, ["key"], max_bucket_size, capped_stats)
     sim_a = sh.select(F.col("id").alias("a"), F.col("sim").alias("sima"))
     sim_b = sh.select(F.col("id").alias("b"), F.col("sim").alias("simb"))
     return (
@@ -550,38 +499,42 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs, blocked by shared shingle.
+    """Exact n-gram Jaccard near-dup pairs: prefix-filtered candidates,
+    exact verify.
 
-    Inverted-index join (explode shingles -> self-join on shingle) with a
-    df-cutoff on hot shingles so a stop-shingle can't go quadratic; exact
-    intersection/union via groupBy counts — no full text comparison. The
-    index key is the 64-bit shingle hash (hashed_shingles): identical
-    counts modulo ~2^-64 collisions, no shingle strings built or
-    shuffled.
+    Shingles are the 64-bit hashes of ``hashed_shingles`` (identical sets
+    modulo ~2^-64 collisions, no shingle strings built or shuffled). Each
+    document's shingles are ordered rarest first (global document
+    frequency, hash as tie-break) and the document is keyed on its first
+    ``|x| - ceil(t*|x|) + 1``: any pair with Jaccard >= t shares a shingle
+    in both prefixes, so the prefix self-join loses no true pair while a
+    common shingle rarely enters a prefix. Verify = exact
+    ``array_intersect``/``array_union`` Jaccard, as in ``minhash_lsh_pairs``.
+    Returns (a, b, jaccard) with a < b.
     """
     sh = docs.select(
         F.col(id_col).alias("id"), _tokens(F.col(text_col)).alias("_t")
-    ).select("id", F.explode(hashed_shingles(F.col("_t"), n)).alias("s"))
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    # drop shingles present in too many docs (hub-shingle skew guard)
-    hot = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df")).filter(F.col("df") > 1000)
-    sh = sh.join(hot, "s", "left_anti")
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, "s")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .groupBy(F.col("a.id").alias("ia"), F.col("b.id").alias("ib"))
-        .agg(F.count(F.lit(1)).alias("inter"))
+    ).select("id", hashed_shingles(F.col("_t"), n).alias("sh"))
+    tok = sh.select("id", F.explode("sh").alias("s"))
+    freq = tok.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
+    ranked = tok.join(freq, "s").groupBy("id").agg(
+        F.array_sort(F.collect_list(F.struct("df", "s"))).alias("r")
     )
+    # the -1e-9 keeps float error in t*|x| from shortening a prefix
+    size = F.size("r")
+    plen = (size - F.ceil(size * F.lit(threshold) - 1e-9) + 1).cast("int")
+    prefix = ranked.select("id", F.explode(F.slice("r", 1, plen)).alias("p")).select(
+        "id", F.col("p.s").alias("s")
+    )
+    sha = sh.select(F.col("id").alias("a"), F.col("sh").alias("sha"))
+    shb = sh.select(F.col("id").alias("b"), F.col("sh").alias("shb"))
+    jac = F.size(F.array_intersect("sha", "shb")) / F.size(F.array_union("sha", "shb"))
     return (
-        inter.join(sizes.withColumnRenamed("id", "ia").withColumnRenamed("sz", "sza"), "ia")
-        .join(sizes.withColumnRenamed("id", "ib").withColumnRenamed("sz", "szb"), "ib")
-        .withColumn(
-            "jaccard",
-            (F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter"))).cast("double"),
-        )
+        _self_join_candidates(prefix, ["s"])
+        .join(sha, "a").join(shb, "b")
+        .withColumn("jaccard", jac.cast("double"))
         .filter(F.col("jaccard") >= threshold)
-        .select(F.col("ia").alias("a"), F.col("ib").alias("b"), "jaccard")
+        .select("a", "b", "jaccard")
     )
 
 
@@ -596,23 +549,14 @@ def embedding_neardup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-dup: LSH-blocked (random hyperplanes), cosine
     verified. Returns (a, b, cos) with a < b."""
-    from .clustering import _lsh_buckets
-
     v = vectors.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
-    tables = None
-    for t in range(2):
-        bt = _lsh_buckets(v, "v", n_planes, seed + 17 * t, dim).withColumn("table", F.lit(t))
-        tables = bt if tables is None else tables.unionByName(bt)
-    a, b = tables.alias("a"), tables.alias("b")
-    return (
-        a.join(b, ["table", "bucket"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("a"), F.col("b.id").alias("b"),
-            cosine_expr(F.col("a.v"), F.col("b.v")).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
-        .dropDuplicates(["a", "b"])
+    seeds = [seed + 17 * t for t in range(2)]
+    # the vector rides the self-join (cosine before the pair dedup): two
+    # re-attach joins after an ids-only join would cost more exchanges
+    cos = cosine_expr(F.col("a.v"), F.col("b.v")).alias("cos")
+    return _self_join_candidates(
+        _hyperplane_keys(v, "v", seeds, n_planes, dim), ["table", "key"],
+        pair_cols=(cos,), where=F.col("cos") >= threshold,
     )
 
 

@@ -21,8 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .clustering import _lsh_buckets
 from .embedding import cosine_expr, make_embedder
+from .similarity import _hyperplane_keys
 
 
 def normalize_surface(col):
@@ -83,20 +83,19 @@ def link_mentions(
     Output = mentions + (entity_id, link_sim, link_kind).
 
     ``lsh_dist`` selects the hyperplane family (see
-    ``clustering._lsh_plane_matrix``): the default seeded gaussians, or
+    ``similarity._lsh_plane_matrix``): the default seeded gaussians, or
     ``"rademacher_md5"`` — same LSH quality, but DuckDB-reproducible,
     which is what lets the driver's ``link_entities`` query oracle-check
     this stage end-to-end (exact-hit, embedding-hit and no-hit rows).
     """
     embed = make_embedder(dim=dim, seed=seed)
     # PERSISTED fan-out bases (r06): the naive composition re-executed the
-    # full upstream chain per plan reference — the mention subtree 5x (the
-    # exact-hit branch, the three LSH tables, the final left join) and the
-    # entity subtree 4x (exact join + three LSH tables), each recomputing
-    # its window/normalization lineage, and the embedder ran once PER LSH
-    # TABLE per side (noop-isolated link_entities at sf0.1: ~110 s).
-    # Persisting the three narrow bases makes every chain run once
-    # (~8 s); identical rows — the plan fan-out was pure recomputation.
+    # full upstream chain per plan reference — the mention subtree for the
+    # exact-hit branch, the LSH keys and the final left join, the entity
+    # subtree for the exact join and the LSH keys — each recomputing its
+    # window/normalization lineage (noop-isolated link_entities at sf0.1:
+    # ~110 s with one LSH branch per table). Persisting the narrow bases
+    # makes every chain run once; identical rows.
     entities = entities.persist()
     m = mentions.withColumn("__norm", normalize_surface(F.col(term_col))).persist()
     # cheap path: exact normalized match
@@ -111,9 +110,11 @@ def link_mentions(
     # when miss is empty the embedding path below is a cheap no-op branch
     # of the same plan (r01 minor #7)
     # embedding path, LSH-blocked. Embed ONCE per distinct surface (the
-    # LSH candidate only needs (__norm, vec): doc_id/term were dead
-    # columns in the old per-table dedup — best joins back on __norm) and
-    # share the embedded base across the 3 banding tables.
+    # LSH candidate only needs (__norm, vec): best joins back on __norm);
+    # all 3 banding tables are keyed in one projection over each side.
+    # The embedded bases stay persisted although each now has one
+    # consumer: without them link_entities at sf0.1 on 4 cores took
+    # 116 s, with them 35 s (same rows).
     ent_v = entities.select(
         "entity_id", F.col("norm").alias("__enorm")
     ).withColumn("evec", embed(F.col("__enorm"))).persist()
@@ -121,18 +122,11 @@ def link_mentions(
         miss.select("__norm").dropDuplicates(["__norm"])
         .withColumn("mvec", embed(F.col("__norm"))).persist()
     )
-    mb, eb = None, None
-    for t in range(3):
-        mb_t = _lsh_buckets(
-            miss_v, "mvec", n_planes, seed + 31 * t, dim, dist=lsh_dist,
-        ).withColumn("table", F.lit(t))
-        eb_t = _lsh_buckets(
-            ent_v, "evec", n_planes, seed + 31 * t, dim, dist=lsh_dist
-        ).withColumn("table", F.lit(t))
-        mb = mb_t if mb is None else mb.unionByName(mb_t)
-        eb = eb_t if eb is None else eb.unionByName(eb_t)
+    seeds = [seed + 31 * t for t in range(3)]
+    mb = _hyperplane_keys(miss_v, "mvec", seeds, n_planes, dim, dist=lsh_dist)
+    eb = _hyperplane_keys(ent_v, "evec", seeds, n_planes, dim, dist=lsh_dist)
     cand = (
-        mb.join(eb, ["table", "bucket"])
+        mb.join(eb, ["table", "key"])
         .withColumn("sim", cosine_expr(F.col("mvec"), F.col("evec")))
         .filter(F.col("sim") >= threshold)
     )

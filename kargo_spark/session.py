@@ -78,25 +78,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("KARGO_ADVISORY_PARTITION", "64m"),
-        )
-        # floor for AQE partition coalescing: the default 1m folds the
-        # CPU-dense-but-byte-light text shuffles (window/join stages over
-        # candidate rows are ~10-20 MB at bench scale) onto a handful of
-        # tasks; a lower floor keeps them wide. Parameterized: at real
-        # scale partitions are byte-heavy and the floor never binds.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("KARGO_MIN_PARTITION_SIZE", "1m"),
-        )
-        # allow the planner to pick shuffled-hash over sort-merge when the
-        # per-partition build side fits (guide §3.1) — env-overridable
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("KARGO_PREFER_SMJ", "true"),
-        )
         .config("spark.sql.session.timeZone", "UTC")
         # allow co-partitioning on a SUBSET of the join keys: the graph
         # store buckets triples on (subj, obj) so the incremental merge

@@ -408,3 +408,65 @@ def test_simhash_density_guard_observable_and_default_off(spark):
     assert stats["max_possible_pairs_dropped"] >= 66
     assert (100, 101) in capped_pairs
     assert not any(a <= 12 and b <= 12 for a, b in capped_pairs)
+
+
+def test_ngram_jaccard_exact_with_shingle_in_over_1000_docs(spark):
+    """A shingle shared by more than 1,000 documents must still count: the
+    output equals a brute-force Jaccard over the same shingle sets (a
+    document-frequency cutoff undercounted every intersection through it
+    and dropped true pairs)."""
+    from itertools import combinations
+
+    rows = [(i, f"common words here u{i // 2} v{i // 2}") for i in range(1100)]
+    rows += [(2000 + i, "common words here") for i in range(3)]  # hot shingle only
+    rows += [(3000, "common words here u7 x9"), (3001, "other words u7 v7 here")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    sets = {
+        r["id"]: set(r["sh"])
+        for r in docs.select(
+            F.col("doc_id").alias("id"), dedup._tokens(F.col("text")).alias("_t")
+        ).select("id", dedup.hashed_shingles(F.col("_t"), 3).alias("sh")).collect()
+    }
+    for t in (0.5, 0.25):
+        want = {}
+        for a, b in combinations(sorted(sets), 2):
+            j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+            if j >= t:
+                want[(a, b)] = j
+        got = {
+            (r["a"], r["b"]): r["jaccard"]
+            for r in dedup.ngram_jaccard_pairs(docs, n=3, threshold=t).collect()
+        }
+        assert got == want
+        assert want[(0, 1)] == 1.0 and want[(2000, 2001)] == 1.0
+
+
+def test_hyperplane_keys_match_numpy_sign_buckets(spark):
+    """Each table's key groups vectors exactly as the signs of X @ P.T >= 0
+    do for that table's planes, for both plane families and 2 or 3
+    tables."""
+    from kargo_spark.similarity import _hyperplane_keys, _lsh_plane_matrix
+
+    rng = np.random.default_rng(11)
+    n, dim, n_planes = 200, 16, 5
+    X = rng.standard_normal((n, dim))
+    vdf = spark.createDataFrame(
+        [(i, [float(x) for x in X[i]]) for i in range(n)], "id long, v array<double>"
+    )
+
+    def groups(labels):
+        out = {}
+        for i, lab in enumerate(labels):
+            out.setdefault(lab, set()).add(i)
+        return sorted(map(sorted, out.values()))
+
+    for dist in ("gaussian", "rademacher_md5"):
+        for n_tables in (2, 3):
+            seeds = [9 + 31 * t for t in range(n_tables)]
+            keyed = _hyperplane_keys(vdf, "v", seeds, n_planes, dim, dist).collect()
+            assert len(keyed) == n * n_tables
+            for t, s in enumerate(seeds):
+                key = {r["id"]: r["key"] for r in keyed if r["table"] == t}
+                bits = X @ _lsh_plane_matrix(n_planes, s, dim, dist).T >= 0
+                want = [tuple(b) for b in bits]
+                assert groups([key[i] for i in range(n)]) == groups(want), (dist, n_tables, t)
