@@ -25,10 +25,14 @@ Every pair producer gets its candidates from one shared core in
 observable through ``capped_stats``) over a banded table, with hyperplane
 tables keyed by ``_hyperplane_keys``. Verification stays in each producer.
 
-All hashing is seeded/deterministic (xxhash64 JVM-side where possible, md5
-in pandas UDFs) — never Python ``hash``. Signatures are computed
-JVM-side with ``F.transform`` over shingle arrays, so the only shuffle is
-the band-bucket groupBy/join; at 100 TB that join is the cost and it is
+All hashing is seeded/deterministic (xxhash64 or md5, never Python
+``hash``). Tokens and shingles are split and hashed JVM-side; the
+per-document signatures over those hash arrays — SimHash bit votes and
+MinHash slot minima — are Arrow kernels (``arrow_udf``, numpy over each
+batch's flat list values, no per-row Python), bit-identical to the JVM
+formulas they replaced, whose higher-order lambdas Spark interprets
+without codegen. Signatures are map-side, so the only shuffle is the
+band-bucket groupBy/join; at 100 TB that join is the cost and it is
 band-parallel and key-balanced by construction (bucket key = (band, hash)).
 """
 
@@ -37,8 +41,12 @@ from __future__ import annotations
 import math
 from itertools import combinations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.types import ArrayType, LongType
 
 from .embedding import cosine_expr
 from .similarity import _CAP_STATS, _hyperplane_keys, _self_join_candidates
@@ -101,20 +109,128 @@ def hashed_shingles(tok_col, n: int = 3):
     )
 
 
-def minhash_signature(shingle_col, num_hashes: int = 32, seed: int = 42):
-    """num_hashes minhash values: min over shingles of xxhash64(shingle, k).
-
-    Single-pass: ONE aggregate over the shingle array with a num_hashes-wide
-    accumulator (zip_with least) — the naive form (num_hashes separate
-    array_min/transform pairs) re-traverses the array num_hashes times and
-    bloats codegen (r01 plan-audit note)."""
-    seeds = F.array(*[F.lit(seed + k) for k in range(num_hashes)])
-    init = F.array_repeat(F.lit((1 << 63) - 1).cast("long"), num_hashes)
-    return F.aggregate(
-        shingle_col,
-        init,
-        lambda acc, s: F.zip_with(acc, seeds, lambda a, k: F.least(a, F.xxhash64(s, k))),
+# Spark's XXH64 (catalyst.expressions.XXH64) elementwise over numpy uint64
+# arrays: multiplication and addition wrap mod 2^64 exactly as Java longs.
+_P1, _P2, _P3, _P4, _P5 = (
+    np.uint64(p) for p in (
+        0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+        0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5,
     )
+)
+_LONG_MAX = (1 << 63) - 1
+
+
+def _rotl(x, r: int):
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _fmix(h):
+    h ^= h >> np.uint64(33)
+    h *= _P2
+    h ^= h >> np.uint64(29)
+    h *= _P3
+    h ^= h >> np.uint64(32)
+    return h
+
+
+def _xxh64_long(x, seed):
+    """``XXH64.hashLong(x, seed)``."""
+    h = seed + _P5 + np.uint64(8)
+    h ^= _rotl(x * _P2, 31) * _P1
+    return _fmix(_rotl(h, 27) * _P1 + _P4)
+
+
+def _xxh64_int(x, seed):
+    """``XXH64.hashInt(x, seed)``; ``x`` holds the int's low 32 bits."""
+    h = seed + _P5 + np.uint64(4)
+    h ^= x * _P1
+    return _fmix(_rotl(h, 23) * _P2 + _P3)
+
+
+def _list_parts(arr: pa.Array):
+    """(values as uint64 with nulls at 0, value-null mask or None,
+    0-based offsets) of a list<int64> array, restricted to its own slice."""
+    offs = np.asarray(arr.offsets, dtype=np.int64)
+    vals = arr.values.slice(offs[0], offs[-1] - offs[0])
+    nulls = vals.is_null().to_numpy(zero_copy_only=False) if vals.null_count else None
+    v = vals.fill_null(0).to_numpy().view(np.uint64)
+    return v, nulls, offs - offs[0]
+
+
+def _simhash_votes(arr: pa.Array) -> pa.Array:
+    """list<int64> token hashes -> int64 SimHash, the sign of each bit's
+    ±1 vote sum packed into the long (``sum > 0`` sets the bit). One
+    running sum over the flat values per bit — segment sums are
+    differences of it at the offsets — so memory is O(values per batch):
+    no values x 64 matrix. A null element votes -1 on every bit, as the
+    JVM fold's ``when(null == 1, 1).otherwise(-1)`` did; a null list
+    gives null and an empty list 0."""
+    v, _, offs = _list_parts(arr)
+    lens = np.diff(offs)
+    # bit i of every value comes from byte i // 8 of its little-endian
+    # view; uint8/int32 passes move an eighth/half of uint64/int64 ones
+    # (the int32 running sum is bounded by the batch's value count)
+    by = v.astype("<u8", copy=False).view(np.uint8).reshape(-1, 8)
+    bit = np.empty(len(v), dtype=np.uint8)
+    run = np.zeros(len(v) + 1, dtype=np.int32)
+    out = np.zeros(len(arr), dtype=np.uint64)
+    for i in range(64):
+        np.right_shift(by[:, i // 8], i % 8, out=bit)
+        np.bitwise_and(bit, 1, out=bit)
+        np.cumsum(bit, dtype=np.int32, out=run[1:])
+        ones = run[offs[1:]] - run[offs[:-1]]
+        out |= (2 * ones > lens).astype(np.uint64) << np.uint64(i)
+    return pa.array(out.view(np.int64), mask=arr.is_null().to_numpy(zero_copy_only=False))
+
+
+_simhash_kernel = arrow_udf(_simhash_votes, LongType())
+
+
+def _minhash_kernel(num_hashes: int, seed: int):
+    """Arrow kernel list<int64> shingle hashes -> list<int64> signature:
+    slot k = signed min over the shingles of Spark's
+    ``xxhash64(s, lit(seed + k))`` = ``hashInt(seed + k, hashLong(s, 42))``
+    — or ``hashLong`` when any ``seed + k`` leaves int32, where
+    ``F.array`` of the literals widens every slot to bigint."""
+    wide = any(not -(1 << 31) <= seed + k < (1 << 31) for k in range(num_hashes))
+    hash_k = _xxh64_long if wide else _xxh64_int
+    mask = (1 << 64) - 1 if wide else (1 << 32) - 1
+    # one-element arrays, not numpy scalars: scalar uint64 overflow warns
+    ks = [np.array([(seed + k) & mask], dtype=np.uint64) for k in range(num_hashes)]
+
+    def signature(arr: pa.Array) -> pa.Array:
+        v, nulls, offs = _list_parts(arr)
+        h = _xxh64_long(v, np.uint64(42))
+        if nulls is not None:
+            # Spark's xxhash64 skips a null column: the hash stays the seed
+            h[nulls] = 42
+        lens = np.diff(offs)
+        full = lens > 0
+        starts = offs[:-1][full]
+        # an empty shingle array keeps the JVM aggregate's init: Long.MAX
+        sig = np.full((len(arr), num_hashes), _LONG_MAX, dtype=np.int64)
+        for k, x in enumerate(ks):
+            t = hash_k(x, h)
+            if len(starts):
+                sig[full, k] = np.minimum.reduceat(t.view(np.int64), starts)
+        step = np.arange(0, (len(arr) + 1) * num_hashes, num_hashes, dtype=np.int32)
+        return pa.ListArray.from_arrays(step, pa.array(sig.ravel()), mask=arr.is_null())
+
+    return arrow_udf(signature, ArrayType(LongType()))
+
+
+def minhash_signature(shingle_col, num_hashes: int = 32, seed: int = 42):
+    """num_hashes minhash values: slot k = min over the shingle hashes
+    (``array<long>``, as ``hashed_shingles`` builds them) of
+    ``xxhash64(shingle, seed + k)``, signed, as Spark computes it.
+
+    An Arrow kernel (``_minhash_kernel``): Spark's XXH64 in numpy uint64
+    arithmetic over the flat shingle values of each batch, one pass per
+    slot, then ``np.minimum.reduceat`` at the list offsets. Bit-identical
+    to the JVM ``aggregate``/``zip_with(least(xxhash64))`` fold it
+    replaces (higher-order lambdas are interpreted, never codegen'd):
+    null array -> null, empty array -> ``Long.MAX_VALUE`` in every slot."""
+    return _minhash_kernel(num_hashes, seed)(shingle_col)
 
 
 def derive_bands(num_hashes: int, jaccard_threshold: float) -> int:
@@ -284,46 +400,21 @@ def md5_token_hash60(t):
 
 
 def simhash64(col, seed: int = 42, token_hash=None):
-    """64-bit SimHash JVM-side: per token hash -> ±1 per bit -> sign of sum.
+    """64-bit SimHash: per token hash -> ±1 per bit -> sign of the sum.
 
-    Single-pass formulation: ONE aggregate over the token-hash array with a
-    64-wide int accumulator (zip_with add of each hash's bit signs), then
-    one fold packs the sign vector into the long. The naive form (64
-    separate aggregates, one per bit) re-traverses the token array 64x and
-    blows up codegen — this version is O(tokens) per row.
+    Tokens are split and hashed JVM-side (one ``transform`` per token);
+    the 64 bit votes are an Arrow kernel (``_simhash_votes``: numpy over
+    the flat hash values of each batch, no per-row Python), bit-identical
+    to the JVM ``aggregate``/``zip_with`` fold it replaces, whose 64-wide
+    lambda per token Spark interprets without codegen. Null text -> null,
+    no tokens -> 0.
 
     ``token_hash``: Column function token -> long; default seeded
     xxhash64 (fastest), ``md5_token_hash60`` for SQL-reproducibility.
     """
-    toks = _tokens(col)
     if token_hash is None:
-        th = F.transform(toks, lambda t: F.xxhash64(t, F.lit(seed)))
-    else:
-        th = F.transform(toks, token_hash)
-    idx = F.sequence(F.lit(0), F.lit(63))
-    zero = F.array_repeat(F.lit(0).cast("long"), 64)
-    # DataFrame-API shiftright/shiftleft require literal shift counts; the
-    # SQL functions accept columns — call them by name for the lambda vars.
-    sr = lambda x, i: F.call_function("shiftright", x, i.cast("int"))  # noqa: E731
-    sl = lambda x, i: F.call_function("shiftleft", x, i.cast("int"))  # noqa: E731
-    sums = F.aggregate(
-        th,
-        zero,
-        lambda acc, h: F.zip_with(
-            acc,
-            idx,
-            lambda a, i: a + F.when(sr(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        ),
-    )
-    packed = F.aggregate(
-        F.zip_with(
-            sums, idx,
-            lambda s, i: F.when(s > 0, sl(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, b: acc.bitwiseOR(b),
-    )
-    return packed
+        token_hash = lambda t: F.xxhash64(t, F.lit(seed))  # noqa: E731
+    return _simhash_kernel(F.transform(_tokens(col), token_hash))
 
 
 def simhash_band_spec(
@@ -394,10 +485,13 @@ def simhash_pairs_from_hashes(
     Plan shape (re-profiled r06): the b block values are computed once
     into an array column, the table->block-combination map is a tiny
     broadcast DataFrame (DATA, not a 495-element literal expression — the
-    literal variant cost ~50 s of pure planning/codegen), and each table
+    literal variant cost ~50 s of pure planning/codegen) built from an
+    Arrow table, so it plans as a ``LocalTableScan`` and runs no Python
+    worker tasks (``createDataFrame`` of a Python list scans a
+    parallelized Python RDD on every execution), and each table
     key is xxhash64 over (table id, its block values), so different
     tables never share buckets. The (id, sim) base is PERSISTED so the
-    expensive SimHash aggregate upstream is computed once, not once per
+    SimHash kernel upstream is computed once, not once per
     self-join side. The self-join is a single equi-join on ``key`` whose
     shuffle carries ONLY (id, key) — at 495 tables/doc the banded table
     is ~500x the corpus row count, so every byte on it is multiplied;
@@ -434,7 +528,10 @@ def simhash_pairs_from_hashes(
 
     spark = hashed.sparkSession
     combo_df = spark.createDataFrame(
-        [(t, list(tbl)) for t, tbl in enumerate(tables)], "tbl int, blks array<int>"
+        pa.table({
+            "tbl": pa.array(range(len(tables)), pa.int32()),
+            "blks": pa.array([list(t) for t in tables], pa.list_(pa.int32())),
+        })
     )
     # persist: one SimHash pass for the corpus (both self-join sides and
     # the verify re-attach read this n-row, 16-byte/row cache). Same

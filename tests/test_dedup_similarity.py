@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from kargo_spark import dedup
@@ -470,3 +471,152 @@ def test_hyperplane_keys_match_numpy_sign_buckets(spark):
                 bits = X @ _lsh_plane_matrix(n_planes, s, dim, dist).T >= 0
                 want = [tuple(b) for b in bits]
                 assert groups([key[i] for i in range(n)]) == groups(want), (dist, n_tables, t)
+
+
+# --- SimHash / MinHash Arrow kernels against the JVM formulas they replaced.
+# The oracles below are the former JVM-side bodies of dedup.simhash64 and
+# dedup.minhash_signature (aggregate/zip_with lambdas); the kernels must
+# match them bit for bit, nulls and empty inputs included.
+
+
+def _simhash64_oracle(col, seed=42, token_hash=None):
+    toks = dedup._tokens(col)
+    if token_hash is None:
+        th = F.transform(toks, lambda t: F.xxhash64(t, F.lit(seed)))
+    else:
+        th = F.transform(toks, token_hash)
+    idx = F.sequence(F.lit(0), F.lit(63))
+    zero = F.array_repeat(F.lit(0).cast("long"), 64)
+    sr = lambda x, i: F.call_function("shiftright", x, i.cast("int"))  # noqa: E731
+    sl = lambda x, i: F.call_function("shiftleft", x, i.cast("int"))  # noqa: E731
+    sums = F.aggregate(
+        th,
+        zero,
+        lambda acc, h: F.zip_with(
+            acc,
+            idx,
+            lambda a, i: a + F.when(sr(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
+        ),
+    )
+    return F.aggregate(
+        F.zip_with(
+            sums, idx,
+            lambda s, i: F.when(s > 0, sl(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long")),
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, b: acc.bitwiseOR(b),
+    )
+
+
+def _minhash_signature_oracle(shingle_col, num_hashes=32, seed=42):
+    seeds = F.array(*[F.lit(seed + k) for k in range(num_hashes)])
+    init = F.array_repeat(F.lit((1 << 63) - 1).cast("long"), num_hashes)
+    return F.aggregate(
+        shingle_col,
+        init,
+        lambda acc, s: F.zip_with(acc, seeds, lambda a, k: F.least(a, F.xxhash64(s, k))),
+    )
+
+
+def _long_doc(n_tokens=20000, seed=5):
+    rng = np.random.default_rng(seed)
+    return " ".join(f"w{x}" for x in rng.integers(0, 3000, n_tokens))
+
+
+EDGE_TEXTS = [
+    None, "", "   ", "one", "two words", "Ελληνικά 日本語 кириллица",
+    "the quick brown fox jumps over the lazy dog near the river bank",
+    _long_doc(),
+]
+
+
+def _shingle_table(spark, texts):
+    """(doc_id, text, sh) with the shingle hashes materialized: evaluated
+    inline under the oracle's lambdas, the tokenizer would be re-run per
+    element (the hazard hashed_shingles' docstring describes)."""
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    rows = docs.select(
+        "doc_id", "text", dedup._tokens(F.col("text")).alias("_t")
+    ).select("doc_id", "text", dedup.hashed_shingles(F.col("_t")).alias("sh")).collect()
+    return spark.createDataFrame(rows, "doc_id long, text string, sh array<bigint>")
+
+
+def _assert_kernels_match(tab, simhash_args, minhash_args):
+    cols = []
+    for i, (seed, th) in enumerate(simhash_args):
+        cols += [
+            dedup.simhash64(F.col("text"), seed, token_hash=th).alias(f"sk{i}"),
+            _simhash64_oracle(F.col("text"), seed, token_hash=th).alias(f"so{i}"),
+        ]
+    for i, (nh, seed) in enumerate(minhash_args):
+        cols += [
+            dedup.minhash_signature(F.col("sh"), nh, seed).alias(f"mk{i}"),
+            _minhash_signature_oracle(F.col("sh"), nh, seed).alias(f"mo{i}"),
+        ]
+    rows = tab.select("doc_id", *cols).collect()
+    for r in rows:
+        for i, args in enumerate(simhash_args):
+            assert r[f"sk{i}"] == r[f"so{i}"], (r["doc_id"], "simhash", args)
+        for i, args in enumerate(minhash_args):
+            assert r[f"mk{i}"] == r[f"mo{i}"], (r["doc_id"], "minhash", args)
+    return rows
+
+
+def test_signature_kernels_match_jvm_formulas_on_edge_cases(spark):
+    """Null text, empty and whitespace text, 1-2 tokens, non-Latin only
+    (no a-z0-9 token at all) and a ~20k-token document; xxhash and md5
+    token hashes; minhash over 16/32/64 hashes and seeds 0/42/7, plus
+    seeds whose ``seed + k`` leaves int32 (Spark widens the literal array
+    to bigint, so the kernel must switch to hashLong) and hand-built
+    shingle arrays: empty, null, and one holding a null element."""
+    tab = _shingle_table(spark, EDGE_TEXTS).union(
+        spark.createDataFrame(
+            [(100, "x", []), (101, "x", None), (102, "x", [None, 5, -3])],
+            "doc_id long, text string, sh array<bigint>",
+        )
+    )
+    grid = [(nh, s) for nh in (16, 32, 64) for s in (0, 42, 7)]
+    wide = [(16, (1 << 31) - 8), (16, 1 << 40), (16, -(1 << 31) - 3)]
+    rows = _assert_kernels_match(
+        tab, [(42, None), (7, None), (42, dedup.md5_token_hash60)], grid + wide
+    )
+    by_id = {r["doc_id"]: r for r in rows}
+    assert by_id[0]["sk0"] is None and by_id[101]["mk0"] is None
+    # no a-z0-9 token: SimHash 0 (every bit's vote sum is 0)
+    assert by_id[1]["sk0"] == by_id[5]["sk0"] == 0
+    assert by_id[100]["mk0"] == [(1 << 63) - 1] * 16
+    assert by_id[7]["sk0"] not in (None, 0)
+
+
+_WORDS = ["alpha", "beta", "gamma", "delta", "x1", "ü", "日本", "ab-cd", "Q"]
+
+
+@settings(max_examples=12, deadline=None)
+@given(
+    texts=st.lists(
+        st.one_of(
+            st.sampled_from(EDGE_TEXTS[:-1]),
+            st.lists(st.sampled_from(_WORDS), max_size=40).map(" ".join),
+            st.text(max_size=30),
+        ),
+        min_size=1, max_size=6,
+    ),
+    num_hashes=st.sampled_from([16, 32, 64]),
+    seed=st.sampled_from([0, 42, 7]),
+)
+def test_signature_kernels_match_jvm_formulas_property(spark_global, texts, num_hashes, seed):
+    tab = _shingle_table(spark_global, texts)
+    _assert_kernels_match(
+        tab, [(seed, None), (seed, dedup.md5_token_hash60)], [(num_hashes, seed)]
+    )
+
+
+def test_simhash_combo_table_starts_no_python_tasks(spark):
+    """The block-combination table is a local relation, not a scan of a
+    parallelized Python RDD (which runs Python worker tasks per call)."""
+    hashed = spark.range(4).selectExpr("id", "id * 7 AS sim")
+    plan = dedup.simhash_pairs_from_hashes(
+        hashed, max_hamming=8
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan

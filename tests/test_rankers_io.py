@@ -303,6 +303,7 @@ def test_spread_groups_width_killswitch_and_rows(spark, monkeypatch):
     exactly, and KARGO_SPREAD_INPUT=off makes it a no-op."""
     from kargo_spark.graph_rank import _spread_groups
 
+    monkeypatch.delenv("KARGO_SPREAD_INPUT", raising=False)
     df = spark.range(200).selectExpr("cast(id % 37 as string) doc_id", "id value")
     before = sorted((r["doc_id"], r["value"]) for r in df.collect())
     spread = _spread_groups(df)

@@ -17,13 +17,8 @@ from contextlib import redirect_stdout
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from bench import HEADLINE  # noqa: E402
 from kargo_spark.session import get_spark  # noqa: E402
-
-HEADLINE = [
-    "yake_topk", "tfidf_topk", "doc_frequency", "triples_agg", "eval_suite",
-    "minhash_neardup", "simhash_neardup", "ann_bruteforce", "textstats_suite",
-    "repetition_stats", "decontaminate", "events_suite", "kg_pipeline_triples",
-]
 
 
 def main() -> None:
