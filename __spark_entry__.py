@@ -15,11 +15,12 @@ oracle can exist and which pytest covers them instead.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from kargo_spark.skew import widen
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -32,34 +33,8 @@ def _toks(col):
     return F.filter(F.split(F.lower(col), _SPLIT_RE), lambda t: t != "")
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """The driver's sf tables are single parquet files with ONE row group —
-    unsplittable input, so every scan is exactly one task no matter the
-    core count (guide §2.5: 'one huge unsplittable file ... repartition
-    immediately after the read'). Round-robin repartition to the session's
-    default parallelism right after the read so CPU-dense per-document
-    signature work parallelizes instead of serializing on one core.
-    Width is scale-adaptive (defaultParallelism), never a local[32]
-    constant. Applied ONLY where the per-doc compute dominates the extra
-    exchange (measured r06 A/B at sf0.1, min-of-3: simhash 5.26→1.91 s,
-    minhash 4.07→3.91 s, decontaminate 0.61→0.56 s); thin multi-branch
-    scans (textstats_suite +0.6 s, eval_suite +0.2 s) keep the direct
-    1-task scan, where the AQE stage barrier of the added exchange costs
-    more than the serialized compute. KARGO_SPREAD_INPUT=off disables
-    (e.g. for already-multi-file inputs at real scale)."""
-    if os.environ.get("KARGO_SPREAD_INPUT", "auto") == "off":
-        return df
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def _docs_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Documents with the repartition-after-read applied — for the
-    signature-heavy dedup queries (see ``_spread``)."""
-    return _spread(_docs(spark, sf_dir))
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -541,9 +516,9 @@ def _phrase_mentions(spark: SparkSession, sf_dir: str, mod: int) -> DataFrame:
     the shared input of the link_entities query (entities from slice 0,
     mentions from slice 1, so some mention norms are absent from the
     entity table and exercise the embedding / no-hit paths).
-    _docs_spread: the explode feeding the per-doc window otherwise runs
-    as ONE task on the single-row-group parquet (r06)."""
-    d = _docs_spread(spark, sf_dir)
+    widen: the explode feeding the per-doc window otherwise runs as ONE
+    task on the single-row-group parquet (r06)."""
+    d = widen(_docs(spark, sf_dir))
     wp = d.select(
         "doc_id", F.posexplode(_toks(F.col("text"))).alias("pos0", "word")
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "word").filter(
@@ -639,7 +614,7 @@ def q_pair_npmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighting between co-occurrence counting and the final store."""
     from kargo_spark.relations import pair_npmi
 
-    d = _docs_spread(spark, sf_dir)
+    d = widen(_docs(spark, sf_dir))
     occ = d.select(
         "doc_id", F.posexplode(_toks(F.col("text"))).alias("i", "word")
     ).filter(F.length("word") >= 5)
@@ -831,11 +806,11 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via inverted-index join
     (kargo_spark.dedup.ngram_jaccard_pairs semantics, threshold 0.2).
-    _docs_spread: the per-doc 3-gram derivation (split + sliding
+    widen: the per-doc 3-gram derivation (split + sliding
     array_join) is the same signature-heavy shape as minhash/simhash —
     on the driver's single-row-group parquet it would otherwise run as
     ONE task (r06, closing the 'not yet optimized' item)."""
-    d = _docs_spread(spark, sf_dir)
+    d = widen(_docs(spark, sf_dir))
     toks = _toks(F.col("text"))
     idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - 2, F.lit(1)))
     grams = F.array_distinct(F.transform(idx, lambda i: F.array_join(F.slice(toks, i, 3), " ")))
@@ -916,7 +891,7 @@ def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the same tau — which is the DuckDB oracle."""
     from kargo_spark.dedup import minhash_lsh_pairs
 
-    d = _docs_spread(spark, sf_dir)
+    d = widen(_docs(spark, sf_dir))
     # broadcast_verify: this driver corpus is <= 50k docs at every sf the
     # gate runs (sf0.001-1.0), so the map-side verify is safe and ~2.5x
     # faster; the library default stays lazy/sort-merge for real scale.
@@ -937,7 +912,7 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     mutual match)."""
     from kargo_spark.dedup import md5_token_hash60, simhash_pairs
 
-    d = _docs_spread(spark, sf_dir).filter(F.size(_toks(F.col("text"))) > 0)
+    d = widen(_docs(spark, sf_dir)).filter(F.size(_toks(F.col("text"))) > 0)
     return simhash_pairs(
         d, "text", "doc_id", max_hamming=8, token_hash=md5_token_hash60
     )
@@ -950,8 +925,8 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     path against it is pytest-audited."""
     from kargo_spark.dedup import embedding_neardup_pairs
 
-    # _spread: single-row-group embeddings scan (see embedding_neardup_exact)
-    emb = _spread(_read(spark, sf_dir, "embeddings"))
+    # widen: single-row-group embeddings scan (see embedding_neardup_exact)
+    emb = widen(_read(spark, sf_dir, "embeddings"))
     return embedding_neardup_pairs(emb, threshold=0.35, n_planes=4).select(
         "a", "b", F.round("cos", 4).alias("cos")
     )
@@ -1014,7 +989,7 @@ def q_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-5, then recomputes the same recall numbers."""
     from kargo_spark.similarity import brute_force_topk, ivf_topk, lsh_topk
 
-    # left alone (r06): a _spread of this read AND a persist of `exact`
+    # left alone (r06): a widen of this read AND a persist of `exact`
     # (consumed 3x) were both measured — each a wash-to-loss at this
     # query's size (its cost is per-path fixed jobs, not the scan; the
     # persist's materialization barrier cost more than the 3x n*5-cosine
@@ -1193,7 +1168,7 @@ def q_corpus_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     query additionally certifies the cooccurrence_edges builder)."""
     from kargo_spark.graph_rank import cooccurrence_edges, distributed_pagerank
 
-    d = _docs_spread(spark, sf_dir)
+    d = widen(_docs(spark, sf_dir))
     tok = d.select(
         "doc_id", F.posexplode(_toks(F.col("text"))).alias("i", "word")
     ).filter(F.length("word") >= 5)
@@ -1258,10 +1233,11 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (repeat(sha256, 8)) and kind selector (media_id % 3) are deterministic
     and SQL-expressible, so n_bytes/sha are DuckDB-oracle-checked — the
     decode stub's float features stay pytest-only."""
-    from kargo_spark.multimodal import extract_features, repartition_by_bytes, synth_media
+    from kargo_spark.multimodal import extract_features, synth_media
+    from kargo_spark.skew import size_bucketed
 
     media = synth_media(spark, n=64)
-    feats = extract_features(repartition_by_bytes(media))
+    feats = extract_features(size_bucketed(media, "data"))
     return feats.select("media_id", "kind", "n_bytes", "sha")
 
 
@@ -1269,12 +1245,12 @@ def q_embedding_neardup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine near-dup pairs (the parity baseline for the LSH-blocked
     ``embedding_neardup``): all-pairs cosine >= 0.35 over the embeddings
     table. O(n²) on purpose — correctness oracle, not the scale path.
-    _spread: the nested-loop join streams the single-row-group embeddings
+    widen: the nested-loop join streams the single-row-group embeddings
     scan, so the whole O(n²) interpreted-HOF cosine ran on ONE task
     (r06: noop 54.9 -> ~4 s at sf0.1)."""
     from kargo_spark.dedup import embedding_pairs_exact
 
-    emb = _spread(_read(spark, sf_dir, "embeddings"))
+    emb = widen(_read(spark, sf_dir, "embeddings"))
     return embedding_pairs_exact(emb, threshold=0.35).select(
         "a", "b", F.round("cos", 4).alias("cos")
     )
@@ -1290,7 +1266,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts equal the oracle's string-gram counts modulo ~2^-64 collisions."""
     from kargo_spark.dedup import contamination_flags
 
-    d = _docs_spread(spark, sf_dir)
+    d = widen(_docs(spark, sf_dir))
     bench = d.filter(F.col("doc_id") % 17 == 0).select(
         F.col("doc_id").alias("bench_id"), "text"
     )
@@ -1306,7 +1282,7 @@ def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold comparisons are engine-portable."""
     from kargo_spark.textstats import _tokens, quality_filter
 
-    d = _docs_spread(spark, sf_dir)
+    d = widen(_docs(spark, sf_dir))
     # tokenize once (see q_lang_quality): the composite filter's quality
     # + repetition signals otherwise re-split the text ~10x
     d = d.select("doc_id", "text", _tokens(F.col("text")).alias("__t"))
@@ -1425,7 +1401,7 @@ def q_word_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     3 power iterations — is DuckDB-oracle-checkable)."""
     from kargo_spark.graph_rank import distributed_pagerank
 
-    d = _docs_spread(spark, sf_dir)
+    d = widen(_docs(spark, sf_dir))
     w = d.select("doc_id", F.posexplode(_toks(F.col("text"))).alias("pos", "word"))
     nxt = w.withColumn(
         "nxt", F.lead("word").over(Window.partitionBy("doc_id").orderBy("pos"))

@@ -50,6 +50,7 @@ from pyspark.sql.types import ArrayType, LongType
 
 from .embedding import cosine_expr
 from .similarity import _CAP_STATS, _hyperplane_keys, _self_join_candidates
+from .skew import widen
 
 
 def _tokens(col):
@@ -351,13 +352,11 @@ def minhash_lsh_pairs(
         # table is two longs per row), so AQE's byte-based coalescing
         # folds it onto 1-2 tasks (profiled r06: 3.4 s of array
         # intersections on 2 tasks while 30 cores idle). Re-spread the
-        # deduped candidate set to the session's parallelism before the
-        # map-side verify; only on the opt-in small-corpus path — the
-        # lazy sort-merge path at real scale gets wide partitions from
-        # its data volume naturally.
-        cand = cand.repartition(
-            docs.sparkSession.sparkContext.defaultParallelism
-        )
+        # deduped candidate set (behind an exchange, so widen always
+        # repartitions it) before the map-side verify; only on the opt-in
+        # small-corpus path — the lazy sort-merge path at real scale gets
+        # wide partitions from its data volume naturally.
+        cand = widen(cand)
     joined = cand.join(sha_side, "a").join(shb_side, "b")
     jac = F.size(F.array_intersect("sha", "shb")) / F.size(F.array_union("sha", "shb"))
     return (

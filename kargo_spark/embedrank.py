@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .embedding import DEFAULT_DIM, embed_texts_np
+from .skew import widen
+
 
 def _embedrank_schema(df: DataFrame) -> str:
     """Output schema inheriting the caller's doc_id type (string corpus
@@ -97,8 +99,6 @@ def embedrank_scores(
     """docs(doc_id, content) x candidates -> MMR-ranked terms per doc,
     near-duplicate candidates (cosine >= alias_threshold) collapsed into
     the selected term's '|'-joined ``aliases`` column."""
-    from .graph_rank import _spread_groups
-
     cand_part = cands.select(
         "doc_id", F.col("lemma_term").alias("ngram"), "term"
     ).dropDuplicates(["doc_id", "ngram"])
@@ -107,10 +107,8 @@ def embedrank_scores(
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         return _mmr_doc(pdf, n, beta, dim, seed, alias_threshold)
 
-    # _spread_groups: same AQE byte-based-coalescing trap as the per-doc
-    # graph rankers — the MMR stage is CPU-dense on a byte-light input
-    # (r06: noop wall 16.2 s at sf0.1 with the stage folded onto 1-2
-    # tasks); see graph_rank._spread_groups.
-    return _spread_groups(joined).groupBy("doc_id").applyInPandas(
+    # widen by doc_id: the MMR stage is CPU-dense on a byte-light input,
+    # the AQE coalescing trap described in skew.widen
+    return widen(joined, "doc_id").groupBy("doc_id").applyInPandas(
         fn, _embedrank_schema(docs)
     )

@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .skew import widen
+
 RANK_SCHEMA = "doc_id string, ngram string, term string, score double"
 
 
@@ -135,27 +137,6 @@ def _doc_rank(pdf: pd.DataFrame, window: int, position_bias: bool,
     return pd.DataFrame(out, columns=["doc_id", "ngram", "term", "score"])
 
 
-def _spread_groups(df: DataFrame, key: str = "doc_id") -> DataFrame:
-    """Pre-partition a per-doc applyInPandas input by ``key`` into the
-    session's default parallelism. The per-doc ranker inputs are byte-LIGHT
-    but CPU-DENSE (r06 measurement at sf0.1: ~2 MB of shuffle carrying
-    ~73 s of kernel CPU), so AQE's byte-based partition coalescing — bound
-    by the minPartitionSize floor — folds the exchange onto 1-2 tasks and
-    serializes the Python stage (noop wall 32.6 s for topic_rank on 32
-    cores). An explicit repartition(n, key) is exempt from AQE coalescing
-    and already satisfies the groupBy's ClusteredDistribution, so no
-    second exchange is planned. Width is defaultParallelism — scale-
-    adaptive, never a local[32] constant; KARGO_SPREAD_INPUT=off disables
-    (byte-heavy inputs at real scale get wide partitions naturally and
-    can prefer AQE's size-based sizing)."""
-    import os
-
-    if os.environ.get("KARGO_SPREAD_INPUT", "auto") == "off":
-        return df
-    n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, key)
-
-
 def _make_rank_fn(window: int, position_bias: bool, iters: int = 50, tol: float = 1e-6):
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         return _doc_rank(pdf, window, position_bias, iters=iters, tol=tol)
@@ -191,13 +172,13 @@ def single_rank(
     (iters=3, tol=0) makes the ranking SQL-unrollable, which is how the
     driver's singlerank oracle certifies this code path (same device as
     the word_pagerank oracle)."""
-    return _spread_groups(_rank_input(tokens, cands)).groupBy("doc_id").applyInPandas(
+    return widen(_rank_input(tokens, cands), "doc_id").groupBy("doc_id").applyInPandas(
         _make_rank_fn(window, False, iters=iters, tol=tol), _rank_schema(tokens)
     )
 
 
 def position_rank(tokens: DataFrame, cands: DataFrame, window: int = 10) -> DataFrame:
-    return _spread_groups(_rank_input(tokens, cands)).groupBy("doc_id").applyInPandas(
+    return widen(_rank_input(tokens, cands), "doc_id").groupBy("doc_id").applyInPandas(
         _make_rank_fn(window, True), _rank_schema(tokens)
     )
 
@@ -312,7 +293,7 @@ def topic_rank(cands: DataFrame, iters: int = 50, tol: float = 1e-6) -> DataFram
     graph IS the candidate graph) — the device the driver's topic_rank
     oracle uses to certify this code path."""
     inp = cands.select("doc_id", F.col("lemma_term").alias("ngram"), "term", "offset_begin")
-    return _spread_groups(inp).groupBy("doc_id").applyInPandas(
+    return widen(inp, "doc_id").groupBy("doc_id").applyInPandas(
         lambda pdf: _doc_topic_rank(pdf, multipartite=False, iters=iters, tol=tol),
         _rank_schema(cands),
     )
@@ -321,7 +302,7 @@ def topic_rank(cands: DataFrame, iters: int = 50, tol: float = 1e-6) -> DataFram
 def multipartite_rank(cands: DataFrame) -> DataFrame:
     """pke MultipartiteRank parity shape (main.py:136-141)."""
     inp = cands.select("doc_id", F.col("lemma_term").alias("ngram"), "term", "offset_begin")
-    return _spread_groups(inp).groupBy("doc_id").applyInPandas(
+    return widen(inp, "doc_id").groupBy("doc_id").applyInPandas(
         lambda pdf: _doc_topic_rank(pdf, multipartite=True), _rank_schema(cands)
     )
 

@@ -69,8 +69,8 @@ def extract_features(media: DataFrame, strict: bool = False) -> DataFrame:
 
     Batch shape: Arrow hands us columnar batches whose size is bounded by
     ``spark.sql.execution.arrow.maxRecordsPerBatch``; combined with
-    byte-size-aware repartition (``repartition_by_bytes``) no single batch
-    carries an unbounded byte volume.
+    byte-size-aware repartition (``skew.size_bucketed(media, "data")``) no
+    single batch carries an unbounded byte volume.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -87,19 +87,6 @@ def extract_features(media: DataFrame, strict: bool = False) -> DataFrame:
             )
 
     return media.select("media_id", "kind", "data").mapInPandas(run, FEATURES_SCHEMA)
-
-
-def repartition_by_bytes(media: DataFrame, target_bytes: int = 64 << 20) -> DataFrame:
-    """Size-aware repartition: bucket rows by cumulative payload size proxy
-    (length(data) log-bucket + salt) so each task decodes a comparable byte
-    volume — the binary-column analog of skew.size_bucketed."""
-    n = int(media.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    bucket = F.floor(F.log2(F.greatest(F.length("data"), F.lit(1))))
-    salt = F.pmod(F.abs(F.xxhash64("media_id")), F.lit(64))
-    return (
-        media.withColumn("__b", bucket).withColumn("__s", salt)
-        .repartition(n, "__b", "__s").drop("__b", "__s")
-    )
 
 
 def frame_sample_stub(media: DataFrame, every_ms: int = 1000) -> DataFrame:

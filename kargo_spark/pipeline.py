@@ -11,6 +11,7 @@ per-partition lineage), so a killed run resumes where it stopped.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -21,6 +22,11 @@ from .clustering import dbscan_exact, dbscan_scalable
 from .embedding import make_embedder
 from .linking import canonical_entities, link_mentions
 from .skew import size_bucketed
+
+_METRICS_SCHEMA = pa.schema([
+    ("stage", pa.string()), ("rows", pa.int64()),
+    ("seconds", pa.float64()), ("resumed", pa.bool_()),
+])
 
 
 RANKERS = ("tfidf", "kpminer", "yake", "singlerank", "positionrank")
@@ -221,9 +227,10 @@ def run_pipeline(
         "mentions": ments,
         "pairs": prs,
         "triples": triples,
+        # an Arrow table plans as a LocalTableScan: collecting the metrics
+        # starts no job (a Python list would scan a parallelized RDD)
         "metrics": spark.createDataFrame(
-            [(m["stage"], m["rows"], m["seconds"], m["resumed"]) for m in ck.metrics()],
-            "stage string, rows long, seconds double, resumed boolean",
+            pa.Table.from_pylist(ck.metrics(), schema=_METRICS_SCHEMA)
         ),
     }
     if linking:

@@ -28,6 +28,7 @@ cutoff); this module is its labeled exact twin, the same split as
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -191,7 +192,10 @@ def seqratio_eps_edges(
     bc = spark.sparkContext.broadcast((ids, pats))
     nb = (u + block - 1) // block
     tiles = [(bi, bj) for bi in range(nb) for bj in range(bi, nb)]
-    tiles_df = spark.createDataFrame(tiles, "bi int, bj int").repartition(
+    tiles_df = spark.createDataFrame(pa.table({
+        "bi": pa.array([t[0] for t in tiles], pa.int32()),
+        "bj": pa.array([t[1] for t in tiles], pa.int32()),
+    })).repartition(
         min(len(tiles), int(spark.conf.get("spark.sql.shuffle.partitions")) * 4)
     )
     n_cols = len(pattern_cols)

@@ -22,6 +22,7 @@ their own exact verify step.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -239,8 +240,10 @@ def ivf_topk(
         if len(m):
             cents[j] = m.mean(axis=0)
     cents = cents / np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-9)
-    cent_rows = [(int(j), [float(x) for x in cents[j]]) for j in range(n_centroids)]
-    cent_df = corpus.sparkSession.createDataFrame(cent_rows, "cid int, cvec array<double>")
+    cent_df = corpus.sparkSession.createDataFrame(pa.table({
+        "cid": pa.array(range(n_centroids), pa.int32()),
+        "cvec": pa.array(cents.tolist(), pa.list_(pa.float64())),
+    }))
 
     assigned = (
         c.crossJoin(F.broadcast(cent_df))

@@ -17,6 +17,7 @@ shape, fully distributed.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.ml.clustering import LDA
 from pyspark.ml.feature import CountVectorizer, IDF, RegexTokenizer, StopWordsRemover
 from pyspark.ml.functions import vector_to_array
@@ -73,9 +74,10 @@ def topic_model(
     )
     # vocab lookup via broadcast join, NOT a vocabSize-wide literal array in
     # the plan (65k-literal plans bloat codegen/serialization at scale)
-    vocab_df = docs.sparkSession.createDataFrame(
-        list(enumerate(cv_model.vocabulary)), "idx int, word string"
-    )
+    vocab_df = docs.sparkSession.createDataFrame(pa.table({
+        "idx": pa.array(range(len(cv_model.vocabulary)), pa.int32()),
+        "word": pa.array(cv_model.vocabulary, pa.string()),
+    }))
     topics = model.describeTopics(10)
     ex = topics.select(
         F.col("topic").alias("topic_id"),

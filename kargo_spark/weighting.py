@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 
 def document_frequency(
-    cands: DataFrame, term_col: str = "lemma_term", with_n_docs: bool = True
+    cands: DataFrame, term_col: str = "lemma_term", *, with_n_docs: bool = True
 ) -> tuple[DataFrame, int | None]:
     """DF table: #docs containing each candidate n-gram, plus N (doc count).
 

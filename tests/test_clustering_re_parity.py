@@ -260,3 +260,5 @@ def test_seqratio_eps_edges_vocab_guard(spark):
     # under the cap the same vocabulary computes fine
     edges = seqdist.seqratio_eps_edges(vocab, eps=2.0, max_vocab=5)
     assert edges.count() == 10  # C(5,2) pairs all within eps=2
+    # the tile table is Arrow-built, not a parallelized Python RDD
+    assert "ExistingRDD" not in edges._jdf.queryExecution().executedPlan().toString()

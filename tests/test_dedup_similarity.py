@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -114,8 +115,10 @@ def _vectors(spark, n=40, dim=16, seed=3):
     rng = np.random.default_rng(seed)
     X = rng.standard_normal((n, dim)).astype(np.float64)
     X /= np.linalg.norm(X, axis=1, keepdims=True)
-    rows = [(i, [float(x) for x in X[i]]) for i in range(n)]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>"), X
+    return spark.createDataFrame(pa.table({
+        "vec_id": pa.array(range(n), pa.int64()),
+        "embedding": pa.array(X.tolist(), pa.list_(pa.float64())),
+    })), X
 
 
 def test_brute_force_topk_matches_numpy(spark):
@@ -154,6 +157,8 @@ def test_ivf_topk_runs_and_ranks(spark):
     queries = vdf.filter(F.col("vec_id") < 3).select(F.col("vec_id").alias("query_id"), "embedding")
     corpus = vdf.filter(F.col("vec_id") >= 3)
     out = ivf_topk(corpus, queries, k=5, n_centroids=4, n_probe=2)
+    # inputs and centroid table are Arrow-built: no parallelized Python RDD
+    assert "ExistingRDD" not in out._jdf.queryExecution().executedPlan().toString()
     rows = out.collect()
     assert len(rows) == 15
     per_q = {}

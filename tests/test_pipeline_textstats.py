@@ -13,7 +13,6 @@ from kargo_spark.multimodal import (
     decode_image_stub,
     extract_features,
     frame_sample_stub,
-    repartition_by_bytes,
     synth_media,
 )
 from kargo_spark.pipeline import run_pipeline
@@ -41,6 +40,8 @@ def test_pipeline_resume_identical(spark, pipe):
     t1 = sorted(out["triples"].select("subj", "pred", "obj", "support").collect())
     out2 = run_pipeline(spark, docs, wd, ranker="tfidf", min_samples=3, eps=0.35)
     assert all(r["resumed"] for r in out2["metrics"].collect())
+    # Arrow-built: collecting the metrics scans no parallelized Python RDD
+    assert "ExistingRDD" not in out2["metrics"]._jdf.queryExecution().executedPlan().toString()
     t2 = sorted(out2["triples"].select("subj", "pred", "obj", "support").collect())
     assert t1 == t2
 
@@ -132,7 +133,7 @@ def test_multimodal_features_deterministic(spark):
     media = synth_media(spark, n=16)
     f1 = {r["media_id"]: (r["sha"], tuple(r["feat"])) for r in extract_features(media).collect()}
     f2 = {r["media_id"]: (r["sha"], tuple(r["feat"])) for r in
-          extract_features(repartition_by_bytes(media)).collect()}
+          extract_features(size_bucketed(media, "data")).collect()}
     assert f1 == f2  # partitioning never changes content
 
 

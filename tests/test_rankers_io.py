@@ -87,6 +87,8 @@ def test_lda_topics_shapes(spark, staged):
     assert doc_topics.count() == docs.count()
     assert doc_topics.filter((F.col("topic_id") < 0) | (F.col("topic_id") >= 3)).count() == 0
     assert topic_words.count() == 3
+    # the vocabulary lookup is Arrow-built, not a parallelized Python RDD
+    assert "ExistingRDD" not in topic_words._jdf.queryExecution().executedPlan().toString()
     kept = filter_by_topic(docs, doc_topics, topic_id=0, threshold=0.2)
     assert kept.count() <= docs.count()
     csv = topic_csv_shape(doc_topics)
@@ -297,17 +299,39 @@ def test_topic_clusters_singleton_fast_path_matches_loop():
     assert got[0] == [0, 1] and [2] in got
 
 
-def test_spread_groups_width_killswitch_and_rows(spark, monkeypatch):
-    """r06: _spread_groups repartitions per-doc ranker input to the
-    session's default parallelism (AQE-coalescing-exempt), preserves rows
-    exactly, and KARGO_SPREAD_INPUT=off makes it a no-op."""
-    from kargo_spark.graph_rank import _spread_groups
+def test_widen_width_and_rows(spark, tmp_path):
+    """skew.widen: with a key it repartitions to the session's default
+    parallelism (AQE-coalescing-exempt); without one it round-robins a
+    1-file scan and leaves a 16-file scan as it is. Rows never change,
+    and deciding reads the physical plan without starting a job."""
+    from kargo_spark.skew import widen
 
-    monkeypatch.delenv("KARGO_SPREAD_INPUT", raising=False)
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    n = spark.sparkContext.defaultParallelism
     df = spark.range(200).selectExpr("cast(id % 37 as string) doc_id", "id value")
     before = sorted((r["doc_id"], r["value"]) for r in df.collect())
-    spread = _spread_groups(df)
-    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    spread = widen(df, "doc_id")
+    assert "hashpartitioning(doc_id" in plan(spread)
+    assert spread.rdd.getNumPartitions() == n
     assert sorted((r["doc_id"], r["value"]) for r in spread.collect()) == before
-    monkeypatch.setenv("KARGO_SPREAD_INPUT", "off")
-    assert _spread_groups(df) is df
+
+    df.coalesce(1).write.parquet(str(tmp_path / "one"))
+    df.repartition(16).write.parquet(str(tmp_path / "many"))
+    one = spark.read.parquet(str(tmp_path / "one"))
+    many = spark.read.parquet(str(tmp_path / "many"))
+    sc = spark.sparkContext
+    sc.setJobGroup("test_widen", "widen decides from the plan")
+    try:
+        wide_one, wide_many = widen(one), widen(many)
+        assert sc.statusTracker().getJobIdsForGroup("test_widen") == []
+        assert "RoundRobinPartitioning" in plan(wide_one)
+        assert "RoundRobinPartitioning" not in plan(wide_many)
+        rows = sorted((r["doc_id"], r["value"]) for r in wide_many.collect())
+        # the group does record jobs, so the empty list above is real
+        assert sc.statusTracker().getJobIdsForGroup("test_widen") != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows == before
+    assert sorted((r["doc_id"], r["value"]) for r in wide_one.collect()) == before

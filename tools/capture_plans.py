@@ -42,6 +42,8 @@ def main() -> None:
             f"{name}: exchanges={txt.count('Exchange')} "
             f"batcheval={txt.count('BatchEvalPython')} "
             f"arroweval={txt.count('ArrowEvalPython')} "
+            f"roundrobin={txt.count('RoundRobinPartitioning')} "
+            f"hashpart={txt.count('hashpartitioning')} "
             f"-> {path}"
         )
 
