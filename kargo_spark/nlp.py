@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .skew import widen
+
 TOKENS_SCHEMA = (
     "doc_id string, sentence_id int, token_id int, word string, lemma string, "
     "pos string, offset_begin long, offset_end long, "
@@ -323,14 +325,21 @@ def sentences_with_tokens(tokens: DataFrame) -> DataFrame:
     """Group the token table back to one row per sentence with an ordered
     token array — the unit the candidate miner consumes.
 
-    Shuffle on (doc_id, sentence_id) only; sort_array makes the order
-    explicit rather than relying on collect_list ordering.
+    One shuffle, ``widen(tokens, "doc_id")``: a hash partitioning on
+    doc_id at the default parallelism, which AQE does not coalesce and
+    which already satisfies the (doc_id, sentence_id) grouping, so no
+    second exchange is planned. The width carries downstream: a persisted
+    sentence table keeps its partitioning (AQE never coalesces a cached
+    plan), so the candidate miner's ``mapInPandas`` and the pairs join
+    run one Python task per core instead of one per shuffle partition.
+    sort_array makes the token order explicit rather than relying on
+    collect_list ordering.
     """
     tok_struct = F.struct(
         F.col("token_id"), F.col("word"), F.col("lemma"), F.col("pos"),
         F.col("offset_begin"), F.col("offset_end"),
     )
     return (
-        tokens.groupBy("doc_id", "sentence_id")
+        widen(tokens, "doc_id").groupBy("doc_id", "sentence_id")
         .agg(F.sort_array(F.collect_list(tok_struct)).alias("toks"))
     )

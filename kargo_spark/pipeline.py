@@ -130,7 +130,9 @@ def run_pipeline(
         persist=ranker in ("yake", "singlerank", "positionrank"),
     )
     # grouped form consumed by both candidates and pairs; persist so the
-    # (doc, sentence) regroup shuffle happens once
+    # doc-keyed regroup shuffle happens once. The cache keeps that
+    # exchange's width (defaultParallelism, which AQE never coalesces in a
+    # cached plan), so candidates and pairs run one Python task per core.
     sentences = nlp.sentences_with_tokens(tokens).persist()
     cands = ck.run_stage(
         "candidates",
@@ -156,6 +158,10 @@ def run_pipeline(
         "pairs", lambda: relations.pairs(ments, sentences),
         persist=cluster_relations,
     )
+    if workdir is not None:
+        # pairs is its last consumer and is re-read from its checkpoint;
+        # in-memory mode keeps it, since its lazy consumers run later
+        sentences.unpersist()
 
     if cluster_relations:
         embed = make_embedder()

@@ -39,9 +39,22 @@ def size_bucketed(
     partitions were requested (measured: tokenize-stage tail ratio 3.5,
     max-task 22 s vs median 6.3 s, at 8 cores / 20k docs; at local[32]'s
     128 requested partitions most were simply empty). Hashing the payload
-    gives ~one salt per document: same shuffle, uniform occupancy."""
+    gives ~one salt per document: same shuffle, uniform occupancy.
+
+    The width defaults to the session's default parallelism (one task per
+    core), not ``spark.sql.shuffle.partitions``: every Python-UDF task
+    pays a fixed worker cost whatever its row count, because
+    ``pyspark.worker_util.setup_spark_files`` calls
+    ``importlib.invalidate_caches()`` per task and, on Python 3.11, each
+    of the worker's zipimporters then re-reads its whole archive directory
+    (43 ms per spark-core jar, 5.6 ms per pyspark.zip; ~0.2-0.35 s of
+    worker CPU per task on a 4-core host). Measured there: an identity
+    ``mapInPandas`` over 40k rows took 0.45 / 2.56 / 9.56 s at 4 / 32 /
+    128 partitions, against 0.07-0.14 s with no Python. Balance inside
+    each task comes from the 32x salt and the Arrow byte cap, not from
+    extra partitions."""
     spark = df.sparkSession
-    n = n_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n = n_partitions or spark.sparkContext.defaultParallelism
     bucket = F.floor(F.log2(F.greatest(F.length(F.col(payload_col)), F.lit(1))))
     salt = F.pmod(F.abs(F.xxhash64(F.col(payload_col))), F.lit(32 * n))
     return (
@@ -58,7 +71,12 @@ def widen(df: DataFrame, *keys: str) -> DataFrame:
     Dimension Shuffle rule: an exchange must buy back its own cost).
 
     **With keys** — ``repartition(defaultParallelism, *keys)`` before a
-    grouped Python stage. Per-doc ranker and MMR inputs are byte-LIGHT but
+    grouped Python stage. One task per core is the width because a Python
+    stage pays a fixed worker start-up cost per TASK (per-task
+    ``importlib.invalidate_caches()`` re-reading every zipimporter's
+    archive directory, ~0.2-0.35 s of worker CPU on a 4-core host; see
+    ``size_bucketed``), so partitions beyond the core count only add that
+    cost. Per-doc ranker and MMR inputs are byte-LIGHT but
     CPU-DENSE (r06 at sf0.1: ~2 MB of shuffle carrying ~73 s of kernel
     CPU), so AQE's byte-based partition coalescing, bound by the
     minPartitionSize floor, folds a plain groupBy exchange onto 1-2 tasks

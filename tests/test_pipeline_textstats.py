@@ -80,6 +80,66 @@ def test_size_bucketed_preserves_rows(spark):
     assert out.rdd.getNumPartitions() == 4
 
 
+def test_python_stages_run_one_task_per_core(spark):
+    """size_bucketed defaults to defaultParallelism (not the shuffle
+    partition count), sentences_with_tokens regroups through one doc-keyed
+    exchange at that width, and tokenize over size_bucketed runs exactly
+    one Python task per core."""
+    import re
+
+    from kargo_spark import corpus, nlp
+
+    n = spark.sparkContext.defaultParallelism
+    assert n != int(spark.conf.get("spark.sql.shuffle.partitions"))
+    docs = corpus.docs_clean(synth_documents(spark, n_rows=60))
+    assert size_bucketed(docs, "content").rdd.getNumPartitions() == n
+
+    tokens = spark.createDataFrame(
+        [("d1", 0, 0, "The", "the", "DT", 0, 3, "O", "det", 1),
+         ("d1", 0, 1, "hub", "hub", "NN", 4, 7, "O", "root", 0)],
+        nlp.TOKENS_SCHEMA,
+    )
+    plan = nlp.sentences_with_tokens(tokens)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1
+    assert re.findall(r"hashpartitioning\((.*?)\)", plan) == [
+        re.search(r"doc_id#\d+", plan).group(0) + f", {n}"
+    ]
+
+    sc = spark.sparkContext
+    sc.setJobGroup("test_one_task_per_core", "tokenize over size_bucketed")
+    try:
+        nlp.tokenize(size_bucketed(docs, "content")).write.format("noop").mode("overwrite").save()
+        st = sc.statusTracker()
+        stages = [s for j in st.getJobIdsForGroup("test_one_task_per_core")
+                  for s in st.getJobInfo(j).stageIds]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the last stage reads the size_bucketed exchange and runs tokenize
+    assert st.getStageInfo(max(stages)).numTasks == n
+
+
+def test_pipeline_triples_invariant_to_input_layout(spark, tmp_path):
+    """The same corpus as 1 parquet file and as 16 files gives the same
+    triples: input layout changes widths, never content."""
+    def stats(triples):
+        return tuple(triples.agg(
+            F.count(F.lit(1)),
+            F.expr("bit_xor(xxhash64(subj, pred, obj, cast(support as string)))"),
+        ).first())
+
+    docs = synth_documents(spark, n_rows=60)
+    docs.coalesce(1).write.parquet(str(tmp_path / "one"))
+    docs.repartition(16).write.parquet(str(tmp_path / "many"))
+    got = []
+    for name, n_files in (("one", 1), ("many", 16)):
+        src = spark.read.parquet(str(tmp_path / name))
+        assert len(src.inputFiles()) == n_files
+        got.append(stats(run_pipeline(spark, src, None, linking=False)["triples"]))
+    spark.catalog.clearCache()
+    assert got[0][0] > 0
+    assert got[0] == got[1]
+
+
 def test_salted_agg_matches_plain(spark):
     df = spark.createDataFrame(
         [("k1", 1.0)] * 50 + [("k2", 2.0)] * 5, "k string, v double"
