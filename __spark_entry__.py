@@ -1369,7 +1369,7 @@ def q_singlerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     SingleRank, main.py:123-128): per-doc window-10 co-occurrence graph,
     weighted PageRank, candidate score = its word's rank. Pinning
     (iters=3, tol=0) makes the per-doc power iteration SQL-unrollable, so
-    the DuckDB oracle certifies the shipped applyInPandas ranker (r02
+    the DuckDB oracle certifies the shipped applyInArrow ranker (r02
     verdict next-step #8 — moves a per-doc graph ranker from rows-only to
     oracle-checked). Every token gets candidate POS so the graph covers
     the full word stream; candidates = words of length >= 3."""

@@ -97,18 +97,17 @@ def run_stages() -> dict:
         dc = corpus.docs_clean(src)
         if upto == "docs_clean":
             return dc
-        tokens = nlp.tokenize(size_bucketed(dc, "content"))
+        annotated = nlp.annotate(size_bucketed(dc, "content"))
+        if upto == "annotated":
+            return annotated
         if upto == "tokens":
-            return tokens
-        sentences = nlp.sentences_with_tokens(tokens)
-        if upto == "sentences":
-            return sentences
+            return nlp.token_rows(annotated)
         cands = C.filter_candidates(
-            C.mine_candidates(sentences), stopwords=C.DEFAULT_STOPWORDS
+            C.mine_candidates(annotated), stopwords=C.DEFAULT_STOPWORDS
         )
         if upto == "candidates":
             return cands
-        sentences = sentences.persist()
+        annotated = annotated.persist()
         cands = cands.persist()
         df_tab, _ = weighting.document_frequency(cands)
         n_docs = dc.count()
@@ -121,12 +120,12 @@ def run_stages() -> dict:
         ments = relations.mentions(cands, topk)
         if upto == "mentions":
             return ments
-        prs = relations.pairs(ments, sentences)
+        prs = relations.pairs(ments, annotated)
         if upto == "pairs":
             return prs
         return relations.triples_from_pairs(prs)
 
-    stages = ["docs_clean", "tokens", "sentences", "candidates", "scores",
+    stages = ["docs_clean", "annotated", "tokens", "candidates", "scores",
               "topk", "mentions", "pairs", "triples"]
     _noop(chain("triples"))  # warm
     spark.catalog.clearCache()

@@ -1,4 +1,4 @@
-"""Candidate term mining: ``tokens -> candidates``.
+"""Candidate term mining: ``annotated -> candidates``.
 
 Reimplements the pke grammar-selection + filtering semantics
 (reference terms.py:99-158, grammar at main.py:99-102:
@@ -7,8 +7,11 @@ POS alphabet per sentence — the vectorization trick SURVEY.md §2.9 calls
 for: each sentence's tag sequence becomes a string like ``"NNAJVN"`` and
 noun-phrase chunks are regex matches, no per-token Python branching.
 
-Runs as ``mapInPandas`` over sentence-grouped token arrays; emits one row
-per candidate occurrence:
+The grammar runs inside ``nlp.annotate``'s Arrow pass, on the word, lemma
+and tag lists of each sentence it has just tagged (``chunk_sentence``),
+so mining costs no regroup of the token table. ``mine_candidates``
+unpacks the resulting ``cands`` arrays into one row per candidate
+occurrence:
 
     (doc_id, sentence_id, term, lemma_term, tok_begin, tok_end,
      offset_begin, offset_end)
@@ -23,10 +26,7 @@ expressible as plain Column predicates downstream (terms.py:145-158).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -40,47 +40,28 @@ _TAG_CHAR = {"NOUN": "N", "PROPN": "P", "ADJ": "A", "NUM": "M"}
 _CHUNK = re.compile(r"[ANMP]*[NP]")
 
 
-def _mine_sentence(doc_id, sent_id, toks: np.ndarray, out: list) -> None:
-    # toks: array of (token_id, word, lemma, pos, offset_begin, offset_end) rows
-    tag_str = "".join(_TAG_CHAR.get(t["pos"], "x") for t in toks)
+def chunk_sentence(tok_ids, words, lemmas, tags, begins, ends, out: list[list]) -> None:
+    """Append one sentence's grammar matches to ``out``, one list per
+    CANDIDATES_SCHEMA field after (doc_id, sentence_id)."""
+    tag_str = "".join(_TAG_CHAR.get(t, "x") for t in tags)
     for m in _CHUNK.finditer(tag_str):
         b, e = m.start(), m.end()  # token index span [b, e)
-        words = [toks[i]["word"] for i in range(b, e)]
-        lemmas = [toks[i]["lemma"] for i in range(b, e)]
-        out.append(
-            (
-                doc_id,
-                sent_id,
-                " ".join(w.lower() for w in words),
-                " ".join(lemmas),
-                e - b,
-                int(toks[b]["token_id"]),
-                int(toks[e - 1]["token_id"]),
-                int(toks[b]["offset_begin"]),
-                int(toks[e - 1]["offset_end"]),
-            )
-        )
+        for col, val in zip(out, (
+            " ".join(w.lower() for w in words[b:e]),
+            " ".join(lemmas[b:e]),
+            e - b,
+            tok_ids[b],
+            tok_ids[e - 1],
+            begins[b],
+            ends[e - 1],
+        )):
+            col.append(val)
 
 
-def _mine_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = ["doc_id", "sentence_id", "term", "lemma_term", "n_words",
-            "tok_begin", "tok_end", "offset_begin", "offset_end"]
-    for pdf in batches:
-        out: list[tuple] = []
-        for doc_id, sent_id, toks in zip(
-            pdf["doc_id"].values, pdf["sentence_id"].values, pdf["toks"].values
-        ):
-            _mine_sentence(doc_id, int(sent_id), toks, out)
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: pd.Series(dtype=t) for c, t in zip(
-                cols, [object, np.int32, object, object, np.int32, np.int32,
-                       np.int32, np.int64, np.int64])}
-        )
-
-
-def mine_candidates(sentences: DataFrame) -> DataFrame:
-    """``sentences(doc_id, sentence_id, toks) -> candidates`` (occurrence rows)."""
-    return sentences.mapInPandas(_mine_batches, CANDIDATES_SCHEMA)
+def mine_candidates(annotated: DataFrame) -> DataFrame:
+    """``annotated(doc_id, sentence_id, cands) -> candidates``
+    (occurrence rows, CANDIDATES_SCHEMA)."""
+    return annotated.select("doc_id", "sentence_id", F.inline("cands"))
 
 
 # --- pke-parity candidate filtering (reference terms.py:102-158) ---------

@@ -5,9 +5,12 @@ per-partition then merged"):
 
 1. **Per-document rankers** (SingleRank / PositionRank / TextRank family —
    reference: pke classes configured at main.py:122-141). Every document's
-   co-occurrence graph is tiny, so each runs partition-local inside
-   ``applyInPandas`` with a numpy power iteration — zero extra shuffles
-   beyond the groupBy(doc_id).
+   co-occurrence graph is tiny, so each runs partition-local with a numpy
+   power iteration — zero extra shuffles beyond the groupBy(doc_id).
+   SingleRank and PositionRank take each doc as one Arrow table
+   (``applyInArrow``): the per-doc pandas frame cost more than the graph
+   and the power iteration together. TopicRank and MultipartiteRank
+   still run in ``applyInPandas``.
 
 2. **Corpus-level PageRank** over the global term co-occurrence graph:
    edges as a DataFrame, partial (map-side) contribution aggregation per
@@ -19,6 +22,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -33,7 +38,7 @@ def _rank_schema(df) -> str:
     id_type = df.schema["doc_id"].dataType.simpleString()
     return f"doc_id {id_type}, ngram string, term string, score double"
 
-_CAND_POS = {"NOUN", "PROPN", "ADJ", "NUM"}
+_CAND_POS = pa.array(["NOUN", "PROPN", "ADJ", "NUM"])
 
 
 def _pagerank_numpy(adj: np.ndarray, personalization: np.ndarray | None = None,
@@ -108,38 +113,54 @@ def _window_graph(seq_words, seq_glob_idx, vocab, window: int):
     return adj, pers
 
 
-def _doc_rank(pdf: pd.DataFrame, window: int, position_bias: bool,
-              iters: int = 50, tol: float = 1e-6) -> pd.DataFrame:
-    """SingleRank (position_bias=False) / PositionRank (True) for one doc.
+def _rank_doc(tab: pa.Table, window: int, position_bias: bool,
+              iters: int = 50, tol: float = 1e-6) -> pa.Table:
+    """SingleRank (position_bias=False) / PositionRank (True) for one doc,
+    on the doc's ``_rank_input`` rows as one Arrow table.
 
     Graph nodes = lowercased candidate-POS words; edges = co-occurrence
     within ``window`` tokens (window=10 for SingleRank, main.py:123-128),
     weighted by co-occurrence count. Candidate score = sum of member word
-    ranks (pke SingleRank semantics). PositionRank personalizes the
-    restart vector with 1/position of each word's occurrences.
+    ranks, in word order (pke SingleRank semantics). PositionRank
+    personalizes the restart vector with 1/position of each word's
+    occurrences.
+
+    Known quirk, kept bit for bit because the golden checksums depend on
+    it: a word's position counts the doc's candidate rows ahead of its
+    tokens (the pandas ranker sorted the unioned rows by (sentence_id,
+    token_id), and candidate rows carry (0, 0)), so PositionRank's
+    restart weight is 1/(n_cands + i + 1), not pke's 1/(i + 1). SingleRank
+    only reads position differences and is unaffected.
     """
-    doc_id = pdf["doc_id"].iloc[0]
-    toks = pdf.sort_values(["sentence_id", "token_id"])
-    mask = toks["pos"].isin(_CAND_POS).values
-    words = toks["word"].str.lower().values
-    seq_words = words[mask]
-    seq_glob_idx = np.flatnonzero(mask)
-    vocab = {w: i for i, w in enumerate(pd.unique(seq_words))}
-    adj, pers = _window_graph(seq_words, seq_glob_idx, vocab, window)
+    is_cand = pc.is_valid(tab.column("ngram"))
+    toks = tab.filter(pc.invert(is_cand))
+    cands = tab.filter(is_cand)
+    order = np.lexsort((
+        toks.column("token_id").to_numpy(), toks.column("sentence_id").to_numpy(),
+    ))
+    in_pos = pc.is_in(toks.column("pos").take(order), value_set=_CAND_POS)
+    keep = np.flatnonzero(pc.fill_null(in_pos, False).to_numpy())
+    words = [w.lower() for w in toks.column("word").take(order[keep]).to_pylist()]
+    vocab = {w: i for i, w in enumerate(dict.fromkeys(words))}
+    adj, pers = _window_graph(words, cands.num_rows + keep, vocab, window)
     ranks = _pagerank_numpy(adj, pers if position_bias else None, iters=iters, tol=tol)
     wscore = {w: ranks[i] for w, i in vocab.items()}
-    out = []
-    for ngram, term in (
-        pdf[["ngram", "term"]].dropna().drop_duplicates("ngram").itertuples(index=False)
-    ):
-        s = sum(wscore.get(w, 0.0) for w in term.split(" "))
-        out.append((doc_id, ngram, term, float(s)))
-    return pd.DataFrame(out, columns=["doc_id", "ngram", "term", "score"])
+    cands = cands.filter(pc.is_valid(cands.column("term")))
+    scores = [
+        float(sum(wscore.get(w, 0.0) for w in term.split(" ")))
+        for term in cands.column("term").to_pylist()
+    ]
+    return pa.table({
+        "doc_id": cands.column("doc_id"),
+        "ngram": cands.column("ngram"),
+        "term": cands.column("term"),
+        "score": pa.array(scores, pa.float64()),
+    })
 
 
-def _make_rank_fn(window: int, position_bias: bool, iters: int = 50, tol: float = 1e-6):
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _doc_rank(pdf, window, position_bias, iters=iters, tol=tol)
+def _ranker(window: int, position_bias: bool, iters: int = 50, tol: float = 1e-6):
+    def fn(tab: pa.Table) -> pa.Table:
+        return _rank_doc(tab, window, position_bias, iters=iters, tol=tol)
 
     return fn
 
@@ -172,14 +193,14 @@ def single_rank(
     (iters=3, tol=0) makes the ranking SQL-unrollable, which is how the
     driver's singlerank oracle certifies this code path (same device as
     the word_pagerank oracle)."""
-    return widen(_rank_input(tokens, cands), "doc_id").groupBy("doc_id").applyInPandas(
-        _make_rank_fn(window, False, iters=iters, tol=tol), _rank_schema(tokens)
+    return widen(_rank_input(tokens, cands), "doc_id").groupBy("doc_id").applyInArrow(
+        _ranker(window, False, iters=iters, tol=tol), _rank_schema(tokens)
     )
 
 
 def position_rank(tokens: DataFrame, cands: DataFrame, window: int = 10) -> DataFrame:
-    return widen(_rank_input(tokens, cands), "doc_id").groupBy("doc_id").applyInPandas(
-        _make_rank_fn(window, True), _rank_schema(tokens)
+    return widen(_rank_input(tokens, cands), "doc_id").groupBy("doc_id").applyInArrow(
+        _ranker(window, True), _rank_schema(tokens)
     )
 
 

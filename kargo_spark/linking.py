@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from .embedding import cosine_expr, make_embedder
 from .similarity import _hyperplane_keys
+from .skew import widen
 
 
 def normalize_surface(col):
@@ -114,12 +115,15 @@ def link_mentions(
     # all 3 banding tables are keyed in one projection over each side.
     # The embedded bases stay persisted although each now has one
     # consumer: without them link_entities at sf0.1 on 4 cores took
-    # 116 s, with them 35 s (same rows).
+    # 116 s, with them 35 s (same rows). The surface dedup goes through
+    # ``widen``: a plain dropDuplicates inside the persisted plan stays at
+    # the shuffle partition count, since AQE does not coalesce a cached
+    # plan, and every task downstream of the cache pays for that width.
     ent_v = entities.select(
         "entity_id", F.col("norm").alias("__enorm")
     ).withColumn("evec", embed(F.col("__enorm"))).persist()
     miss_v = (
-        miss.select("__norm").dropDuplicates(["__norm"])
+        widen(miss.select("__norm"), "__norm").dropDuplicates(["__norm"])
         .withColumn("mvec", embed(F.col("__norm"))).persist()
     )
     seeds = [seed + 31 * t for t in range(3)]

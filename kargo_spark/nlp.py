@@ -1,18 +1,21 @@
-"""NLP annotation stage: ``docs_clean -> sentences -> tokens``.
+"""NLP annotation stage: ``docs_clean -> annotated -> tokens, candidates``.
 
 The reference runs a stanza pipeline per document (reference corpus.py:
 227-232, 445-492: tokenize / POS / lemma, ``tokenize_no_ssplit=True`` after
 nltk sentence split at corpus.py:513). Heavy NLP models are not available
 in this environment and are not the point — the engine contract is the
-*stage shape*: an Arrow-vectorized ``mapInPandas`` that turns 1 document
-row into N token rows (UDTF-shaped), loading any per-worker state once per
-partition, never per row.
+*stage shape*: one Arrow-vectorized ``mapInArrow`` (``annotate``) that
+turns 1 document row into one row per sentence, carrying the sentence's
+token structs and the candidate occurrences mined from them, loading any
+per-worker state once per partition, never per row. The token and
+candidate tables are ``inline`` views of that pass, so no shuffle ever
+regroups tokens into sentences.
 
 The tagger here is a deterministic lexicon+suffix heuristic producing the
 coarse tags the candidate grammar needs (NOUN/PROPN/ADJ/NUM vs rest, the
 pke grammar ``{<NOUN|PROPN|NUM|ADJ>*<NOUN|PROPN>}`` — reference
 main.py:99-102). Swapping in a real model is a 1-function change: replace
-``_tag_batch`` and keep the schema.
+``_annotate_doc`` and keep the schema.
 
 Offsets are document-absolute character offsets (the reference keeps
 sentence-relative ones, corpus.py:57-58; we keep absolute plus sentence
@@ -24,11 +27,13 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
+from . import candidates as C
 from .skew import widen
 
 TOKENS_SCHEMA = (
@@ -217,8 +222,13 @@ def _deprel_sentence(tags: list[str]) -> list[tuple[str, int]]:
     return out
 
 
-def _annotate_doc(doc_id: str, content: str) -> list[tuple]:
-    """Single linear pass: tokenize the whole document once; a sentence
+def _annotate_doc(content: str) -> Iterator[tuple]:
+    """Annotate one document, yielding one sentence at a time as
+    ``(sentence_id, token_id, word, lemma, pos, offset_begin, offset_end,
+    ner, deprel, deprel_head_id)``: the sentence id, then one list per
+    remaining TOKENS_SCHEMA field, in token order.
+
+    Single linear pass: tokenize the whole document once; a sentence
     break occurs at a token boundary when the inter-token gap contains a
     newline, or contains whitespace and the previous token ends in [.!?]
     (equivalent to splitting on ``(?<=[.!?])\\s+|\\n+`` then tokenizing
@@ -226,26 +236,25 @@ def _annotate_doc(doc_id: str, content: str) -> list[tuple]:
     but without the O(segments x find) rescans). Sentences buffer so the
     NER/deprel passes (context-dependent) run once per sentence; POS/lemma
     stay memoized per word type."""
-    rows: list[tuple] = []
     sent_id = 1
-    tok_id = 0
     prev_end = 0
     prev_last_char = ""
     # vocabulary is tiny relative to token count: memoize (word, sent_start)
     # -> (pos, lemma) so tagging cost is per-type, not per-token
     memo: dict[tuple[str, bool], tuple[str, str]] = {}
-    buf: list[tuple] = []  # (tok_id, word, lemma, pos, begin, end)
+    words: list[str] = []
+    lemmas: list[str] = []
+    tags: list[str] = []
+    begins: list[int] = []
+    ends: list[int] = []
 
-    def flush(sid: int):
-        if not buf:
-            return
-        words = [b[1] for b in buf]
-        tags = [b[3] for b in buf]
-        ner = _ner_sentence(words, tags)
+    def sentence() -> tuple:
         dep = _deprel_sentence(tags)
-        for (tid, word, lemma, pos, ob, oe), ne, (rel, head) in zip(buf, ner, dep):
-            rows.append((doc_id, sid, tid, word, lemma, pos, ob, oe, ne, rel, head))
-        buf.clear()
+        return (
+            sent_id, list(range(1, len(words) + 1)), words, lemmas, tags,
+            begins, ends, _ner_sentence(words, tags),
+            [rel for rel, _ in dep], [head for _, head in dep],
+        )
 
     last_word = ""  # last alphanumeric token (for the abbreviation guard)
     for m in _TOKEN.finditer(content):
@@ -254,50 +263,107 @@ def _annotate_doc(doc_id: str, content: str) -> list[tuple]:
         # following sentence-final punctuation — unless that punctuation
         # closes a known abbreviation ("Mr.", "Ltd.")
         gap = content[prev_end:m.start()]
-        if tok_id > 0 and gap and ("\n" in gap or prev_last_char in ".!?"):
+        if words and gap and ("\n" in gap or prev_last_char in ".!?"):
             abbrev = (
                 "\n" not in gap
                 and prev_last_char == "."
                 and last_word.lower() in _ABBREV
             )
             if not abbrev:
-                flush(sent_id)
+                yield sentence()
                 sent_id += 1
-                tok_id = 0
-        tok_id += 1
+                words, lemmas, tags, begins, ends = [], [], [], [], []
         word = m.group(0)
         if word[:1].isalnum():
             last_word = word
-        key = (word, tok_id == 1)
+        key = (word, not words)
         hit = memo.get(key)
         if hit is None:
-            pos = _tag_word(word, tok_id == 1)
+            pos = _tag_word(word, not words)
             hit = (pos, _lemma(word, pos))
             memo[key] = hit
-        buf.append((tok_id, word, hit[1], hit[0], m.start(), m.end()))
+        words.append(word)
+        lemmas.append(hit[1])
+        tags.append(hit[0])
+        begins.append(m.start())
+        ends.append(m.end())
         prev_end = m.end()
         prev_last_char = word[-1]
-    flush(sent_id)
-    return rows
+    if words:
+        yield sentence()
 
 
-def _annotate_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = ["doc_id", "sentence_id", "token_id", "word", "lemma", "pos",
-            "offset_begin", "offset_end", "ner", "deprel", "deprel_head_id"]
-    for pdf in batches:
-        out: list[tuple] = []
-        for doc_id, content in zip(pdf["doc_id"].values, pdf["content"].values):
-            if content:
-                out.extend(_annotate_doc(doc_id, content))
-        yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-            {c: pd.Series(dtype=t) for c, t in zip(
-                cols, [object, np.int32, np.int32, object, object, object,
-                       np.int64, np.int64, object, object, np.int32])}
+def _after_key(schema: str) -> str:
+    """The fields of a per-sentence row schema after its leading
+    ``doc_id, sentence_id`` key: the element struct of a nested column."""
+    return schema.split(", ", 2)[2]
+
+
+# one row per sentence: its token structs and the candidate occurrences
+# mined from them, each struct a TOKENS_SCHEMA / CANDIDATES_SCHEMA row
+# without the (doc_id, sentence_id) key
+ANNOTATED_SCHEMA = (
+    "doc_id string, sentence_id int, "
+    f"toks array<struct<{_after_key(TOKENS_SCHEMA)}>>, "
+    f"cands array<struct<{_after_key(C.CANDIDATES_SCHEMA)}>>"
+)
+
+
+def _nested(offsets: list[int], columns: list[list], list_type: pa.ListType) -> pa.ListArray:
+    """One list-of-struct column from flat per-field Python lists plus
+    sentence offsets: no per-row objects on the way into Arrow."""
+    fields = list(list_type.value_type)
+    values = pa.StructArray.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, fields)], fields=fields
+    )
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values, type=list_type)
+
+
+def _annotate_batches(
+    batches: Iterator[pa.RecordBatch], schema: pa.Schema
+) -> Iterator[pa.RecordBatch]:
+    """The annotate kernel: each ``(doc_id, content)`` batch becomes one
+    batch of sentence rows. The candidate grammar runs on the word, lemma
+    and tag lists while the sentence is still in hand, so candidates need
+    no regroup of the token rows."""
+    for batch in batches:
+        doc_ids: list = []
+        sent_ids: list[int] = []
+        toks: list[list] = [[] for _ in schema.field(2).type.value_type]
+        cands: list[list] = [[] for _ in schema.field(3).type.value_type]
+        tok_off, cand_off = [0], [0]
+        for doc_id, content in zip(
+            batch.column(0).to_pylist(), batch.column(1).to_pylist()
+        ):
+            if not content:
+                continue
+            for sent in _annotate_doc(content):
+                doc_ids.append(doc_id)
+                sent_ids.append(sent[0])
+                for col, vals in zip(toks, sent[1:]):
+                    col.extend(vals)
+                tok_off.append(len(toks[0]))
+                C.chunk_sentence(*sent[1:7], cands)
+                cand_off.append(len(cands[0]))
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(doc_ids, schema.field(0).type),
+                pa.array(sent_ids, schema.field(1).type),
+                _nested(tok_off, toks, schema.field(2).type),
+                _nested(cand_off, cands, schema.field(3).type),
+            ],
+            schema=schema,
         )
 
 
-def tokenize(docs: DataFrame, strict: bool = False) -> DataFrame:
-    """``docs_clean -> tokens``: 1 doc row -> N token rows via mapInPandas.
+def annotate(docs: DataFrame, strict: bool = False) -> DataFrame:
+    """``docs(doc_id, content) -> annotated``: one ``mapInArrow`` that
+    emits one row per sentence, ``(doc_id, sentence_id, toks, cands)``
+    (ANNOTATED_SCHEMA). ``toks`` holds the sentence's token structs,
+    ``cands`` the candidate occurrences the pke grammar mines from them
+    (see ``candidates``). The token table (``token_rows``) and the
+    candidate table (``candidates.mine_candidates``) are ``inline`` views
+    of this one pass; the relation pairs read ``toks`` directly.
 
     Only (doc_id, content) are shipped through Arrow — column pruning is
     explicit so a 100-TB scan never serializes unused columns into Python.
@@ -307,33 +373,44 @@ def tokenize(docs: DataFrame, strict: bool = False) -> DataFrame:
     heuristic annotator, so a deployment that REQUIRES real model
     annotations fails loudly rather than silently shipping heuristic tags.
     The swap is one function: replace ``_annotate_doc`` with a
-    stanza-backed implementation returning the same 11-column rows
-    (TOKENS_SCHEMA), loading the pipeline once per worker partition.
+    stanza-backed implementation yielding the same per-sentence field
+    lists (TOKENS_SCHEMA), loading the pipeline once per worker partition.
     """
     if strict:
         raise NotImplementedError(
             "real NLP annotations require stanza models not present in this "
             "container; swap kargo_spark.nlp._annotate_doc for a "
-            "stanza-backed function emitting TOKENS_SCHEMA rows (load the "
-            "stanza.Pipeline once per partition), then call "
-            "tokenize(docs, strict=False)"
+            "stanza-backed function yielding one sentence at a time as "
+            "TOKENS_SCHEMA field lists (load the stanza.Pipeline once per "
+            "partition), then call annotate(docs, strict=False)"
         )
-    return docs.select("doc_id", "content").mapInPandas(_annotate_batches, TOKENS_SCHEMA)
+    schema = DataType.fromDDL(ANNOTATED_SCHEMA)
+    arrow_schema = to_arrow_schema(schema)
+    return docs.select("doc_id", "content").mapInArrow(
+        lambda batches: _annotate_batches(batches, arrow_schema), schema
+    )
+
+
+def token_rows(annotated: DataFrame) -> DataFrame:
+    """``annotated -> tokens``: one TOKENS_SCHEMA row per token."""
+    return annotated.select("doc_id", "sentence_id", F.inline("toks"))
+
+
+def tokenize(docs: DataFrame, strict: bool = False) -> DataFrame:
+    """``docs_clean -> tokens``: 1 doc row -> N token rows (see ``annotate``)."""
+    return token_rows(annotate(docs, strict=strict))
 
 
 def sentences_with_tokens(tokens: DataFrame) -> DataFrame:
-    """Group the token table back to one row per sentence with an ordered
-    token array — the unit the candidate miner consumes.
+    """Group a token table back to one row per sentence with an ordered
+    token array. No pipeline path needs it (``annotate`` emits sentence
+    rows); perfbench's traced call still times it.
 
     One shuffle, ``widen(tokens, "doc_id")``: a hash partitioning on
     doc_id at the default parallelism, which AQE does not coalesce and
     which already satisfies the (doc_id, sentence_id) grouping, so no
-    second exchange is planned. The width carries downstream: a persisted
-    sentence table keeps its partitioning (AQE never coalesces a cached
-    plan), so the candidate miner's ``mapInPandas`` and the pairs join
-    run one Python task per core instead of one per shuffle partition.
-    sort_array makes the token order explicit rather than relying on
-    collect_list ordering.
+    second exchange is planned. sort_array makes the token order explicit
+    rather than relying on collect_list ordering.
     """
     tok_struct = F.struct(
         F.col("token_id"), F.col("word"), F.col("lemma"), F.col("pos"),

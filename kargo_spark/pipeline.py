@@ -1,7 +1,7 @@
 """End-to-end KG-construction pipeline (the reference's main.py:202-209
 stage chain, re-expressed as a checkpointed Spark DAG).
 
-    documents -> docs_clean -> tokens -> sentences -> candidates
+    documents -> docs_clean -> annotated -> tokens, candidates
       -> df_counts -> term_scores(ranker) -> terms_topk -> mentions
       -> pairs -> pair_vectors -> clusters -> triples (+ entities, links)
 
@@ -21,7 +21,7 @@ from .checkpointing import CheckpointRunner
 from .clustering import dbscan_exact, dbscan_scalable
 from .embedding import make_embedder
 from .linking import canonical_entities, link_mentions
-from .skew import size_bucketed
+from .skew import size_bucketed, widen
 
 _METRICS_SCHEMA = pa.schema([
     ("stage", pa.string()), ("rows", pa.int64()),
@@ -53,7 +53,7 @@ def triples_chain(
     documents: DataFrame, ranker: str = "tfidf", n_terms: int = 15
 ) -> tuple[DataFrame, list[DataFrame]]:
     """The composed docs→triples chain as ONE lazy DAG — no checkpoints,
-    persists only at the two nodes consumed twice (sentences feeds both
+    persists only at the two nodes consumed twice (annotated feeds
     candidates and pairs; candidates feeds df/scores/mentions). Used by
     the throughput bench and the streaming micro-batch sink.
 
@@ -61,9 +61,9 @@ def triples_chain(
     terminal action.
     """
     dc = corpus.docs_clean(documents)
-    tokens = nlp.tokenize(size_bucketed(dc, "content"))
-    sentences = nlp.sentences_with_tokens(tokens).persist()
-    cands = C.filter_candidates(C.mine_candidates(sentences)).persist()
+    annotated = nlp.annotate(size_bucketed(dc, "content")).persist()
+    tokens = nlp.token_rows(annotated)
+    cands = C.filter_candidates(C.mine_candidates(annotated)).persist()
     # document_frequency's scalar collect is deliberate: it materializes
     # the cands cache BEFORE the broadcast-subquery jobs fire. A fully
     # lazy N (1-row broadcast DF) makes the df_tab and N broadcast jobs
@@ -73,8 +73,8 @@ def triples_chain(
     scores = rank_scores(ranker, tokens, cands, df_tab, n_docs)
     topk = weighting.top_k_terms(scores, k=n_terms)
     ments = relations.mentions(cands, topk)
-    prs = relations.pairs(ments, sentences)
-    return relations.triples_from_pairs(prs), [sentences, cands]
+    prs = relations.pairs(ments, annotated)
+    return relations.triples_from_pairs(prs), [annotated, cands]
 
 
 def run_pipeline(
@@ -124,19 +124,19 @@ def run_pipeline(
     # consumer stages whose lazy persist was pure cache-write overhead.
     # Durable (workdir) modes ignore the flag — checkpoints stay durable.
     docs_clean = ck.run_stage("docs_clean", lambda: corpus.docs_clean(documents))
+    # the one annotate pass: sentence rows carrying their tokens and mined
+    # candidates. Tokens, candidates and pairs all read it, so it is
+    # persisted and runs once, at size_bucketed's width (one Python task
+    # per core). A resume that skips tokens and candidates but recomputes
+    # pairs reruns it lazily.
+    annotated = nlp.annotate(size_bucketed(docs_clean, "content")).persist()
     tokens = ck.run_stage(
-        "tokens",
-        lambda: nlp.tokenize(size_bucketed(docs_clean, "content")),
+        "tokens", lambda: nlp.token_rows(annotated),
         persist=ranker in ("yake", "singlerank", "positionrank"),
     )
-    # grouped form consumed by both candidates and pairs; persist so the
-    # doc-keyed regroup shuffle happens once. The cache keeps that
-    # exchange's width (defaultParallelism, which AQE never coalesces in a
-    # cached plan), so candidates and pairs run one Python task per core.
-    sentences = nlp.sentences_with_tokens(tokens).persist()
     cands = ck.run_stage(
         "candidates",
-        lambda: C.filter_candidates(C.mine_candidates(sentences), stopwords=C.DEFAULT_STOPWORDS),
+        lambda: C.filter_candidates(C.mine_candidates(annotated), stopwords=C.DEFAULT_STOPWORDS),
     )
     df_tab = ck.run_stage(
         "df_counts", lambda: weighting.document_frequency(cands)[0],
@@ -155,13 +155,13 @@ def run_pipeline(
         "mentions", lambda: relations.mentions(cands, topk), persist=linking
     )
     prs = ck.run_stage(
-        "pairs", lambda: relations.pairs(ments, sentences),
+        "pairs", lambda: relations.pairs(ments, annotated),
         persist=cluster_relations,
     )
     if workdir is not None:
         # pairs is its last consumer and is re-read from its checkpoint;
         # in-memory mode keeps it, since its lazy consumers run later
-        sentences.unpersist()
+        annotated.unpersist()
 
     if cluster_relations:
         embed = make_embedder()
@@ -199,11 +199,15 @@ def run_pipeline(
 
     entities = links = None
     if linking:
+        # the (doc_id, term) dedup is widened like link_mentions' own: a
+        # plain dropDuplicates would freeze the mention cache inside
+        # link_mentions at the shuffle partition count
         entities = ck.run_stage("entities", lambda: canonical_entities(ments))
         links = ck.run_stage(
             "links",
             lambda: link_mentions(
-                ments.select("doc_id", "term").dropDuplicates(), entities
+                widen(ments.select("doc_id", "term"), "doc_id", "term").dropDuplicates(),
+                entities,
             ),
         )
     graph_out: dict[str, DataFrame] = {}

@@ -47,7 +47,9 @@ def pairs(mention_df: DataFrame, sentences: DataFrame | None = None) -> DataFram
     """Adjacent-mention pairing per sentence with cooc_no ordinal.
 
     Output: (doc_id, sentence_id, cooc_no, head, tail, head_tok_end,
-    tail_tok_begin, in_between_words?).
+    tail_tok_begin, in_between_words?). ``in_between_words`` needs
+    ``sentences``: per-sentence rows with a ``toks`` token array, such as
+    ``nlp.annotate``'s output.
     """
     w = Window.partitionBy("doc_id", "sentence_id").orderBy("offset_begin", "tok_begin")
     p = (
@@ -70,7 +72,8 @@ def pairs(mention_df: DataFrame, sentences: DataFrame | None = None) -> DataFram
     if sentences is not None:
         # in-between words from the sentence token array: slice between the
         # head's last token and the tail's first token (1-based token ids)
-        p = p.join(sentences, ["doc_id", "sentence_id"], "left").withColumn(
+        toks = sentences.select("doc_id", "sentence_id", "toks")
+        p = p.join(toks, ["doc_id", "sentence_id"], "left").withColumn(
             "in_between_words",
             F.array_join(
                 F.transform(

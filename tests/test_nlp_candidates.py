@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import sys
+
+from pyspark import cloudpickle
 from pyspark.sql import functions as F
 
 from kargo_spark import candidates as C
@@ -11,6 +14,11 @@ from kargo_spark import nlp
 def _tokens(spark, text):
     df = spark.createDataFrame([("d1", text)], "doc_id string, content string")
     return nlp.tokenize(df)
+
+
+def _candidates(spark, text):
+    df = spark.createDataFrame([("d1", text)], "doc_id string, content string")
+    return C.mine_candidates(nlp.annotate(df))
 
 
 def test_tokenize_offsets_roundtrip(spark):
@@ -34,9 +42,7 @@ def test_tokenize_empty_doc_yields_nothing(spark):
 def test_candidate_grammar_matches_np_chunks(spark):
     # "the fast cargo carrier moved dangerous goods" ->
     # chunks: 'fast cargo carrier' (ADJ? fast->NOUN by our tagger) etc.
-    toks = _tokens(spark, "The cargo carrier moved dangerous goods to the cool chain hub.")
-    sents = nlp.sentences_with_tokens(toks)
-    cands = C.mine_candidates(sents)
+    cands = _candidates(spark, "The cargo carrier moved dangerous goods to the cool chain hub.")
     terms = {r["term"] for r in cands.collect()}
     assert "cargo carrier" in terms
     assert "dangerous goods" in terms
@@ -46,8 +52,7 @@ def test_candidate_grammar_matches_np_chunks(spark):
 
 
 def test_filter_candidates_predicates(spark):
-    toks = _tokens(spark, "The cargo carrier moved dangerous goods to the cool chain hub.")
-    cands = C.mine_candidates(nlp.sentences_with_tokens(toks))
+    cands = _candidates(spark, "The cargo carrier moved dangerous goods to the cool chain hub.")
     out = C.filter_candidates(cands, min_chars=3, max_words=2)
     assert all(r["n_words"] <= 2 for r in out.collect())
     out2 = C.filter_candidates(cands, min_frequency=2)
@@ -56,8 +61,7 @@ def test_filter_candidates_predicates(spark):
 
 def test_offset_cutoff_uses_first_occurrence(spark):
     text = "cargo early. " + "filler words here. " * 5 + "the cargo is moved."
-    toks = _tokens(spark, text)
-    cands = C.mine_candidates(nlp.sentences_with_tokens(toks))
+    cands = _candidates(spark, text)
     kept = C.filter_candidates(cands, offset_cutoff=15)
     # 'cargo' first occurs at offset 0 <= 15 so BOTH its occurrences survive
     cargo_rows = [r for r in kept.collect() if r["term"] == "cargo"]
@@ -119,3 +123,143 @@ def test_kargen_lines_carry_real_ner(spark):
     lines = {r["line"] for r in IO.kargen_conll_lines(toks).collect() if r["line"]}
     assert any("\tB-ORG\t" in ln for ln in lines)
     assert any("\tB-GPE\t" in ln for ln in lines)
+
+
+# --- kernel parity: annotate (one mapInArrow that also mines) against the
+# former three-step path, kept here as the oracle: a pandas annotator
+# emitting flat token rows, the doc-keyed sentence regroup, and a pandas
+# miner over the regrouped token arrays ---------------------------------
+
+_TOKEN_COLS = ["doc_id", "sentence_id", "token_id", "word", "lemma", "pos",
+               "offset_begin", "offset_end", "ner", "deprel", "deprel_head_id"]
+_CAND_COLS = ["doc_id", "sentence_id", "term", "lemma_term", "n_words",
+              "tok_begin", "tok_end", "offset_begin", "offset_end"]
+
+
+def _annotate_doc_rows(doc_id, content):
+    rows, buf = [], []
+    sent_id, tok_id, prev_end, prev_last_char, last_word = 1, 0, 0, "", ""
+
+    def flush(sid):
+        if not buf:
+            return
+        words = [b[1] for b in buf]
+        tags = [b[3] for b in buf]
+        ner = nlp._ner_sentence(words, tags)
+        dep = nlp._deprel_sentence(tags)
+        for (tid, word, lemma, pos, ob, oe), ne, (rel, head) in zip(buf, ner, dep):
+            rows.append((doc_id, sid, tid, word, lemma, pos, ob, oe, ne, rel, head))
+        buf.clear()
+
+    for m in nlp._TOKEN.finditer(content):
+        gap = content[prev_end:m.start()]
+        if tok_id > 0 and gap and ("\n" in gap or prev_last_char in ".!?"):
+            abbrev = ("\n" not in gap and prev_last_char == "."
+                      and last_word.lower() in nlp._ABBREV)
+            if not abbrev:
+                flush(sent_id)
+                sent_id += 1
+                tok_id = 0
+        tok_id += 1
+        word = m.group(0)
+        if word[:1].isalnum():
+            last_word = word
+        pos = nlp._tag_word(word, tok_id == 1)
+        buf.append((tok_id, word, nlp._lemma(word, pos), pos, m.start(), m.end()))
+        prev_end = m.end()
+        prev_last_char = word[-1]
+    flush(sent_id)
+    return rows
+
+
+def _annotate_batches_ref(batches):
+    import pandas as pd
+
+    for pdf in batches:
+        out = []
+        for doc_id, content in zip(pdf["doc_id"].values, pdf["content"].values):
+            if content:
+                out.extend(_annotate_doc_rows(doc_id, content))
+        yield pd.DataFrame(out, columns=_TOKEN_COLS)
+
+
+def _mine_sentence_ref(doc_id, sent_id, toks, out):
+    tag_str = "".join(C._TAG_CHAR.get(t["pos"], "x") for t in toks)
+    for m in C._CHUNK.finditer(tag_str):
+        b, e = m.start(), m.end()
+        words = [toks[i]["word"] for i in range(b, e)]
+        lemmas = [toks[i]["lemma"] for i in range(b, e)]
+        out.append((
+            doc_id, sent_id, " ".join(w.lower() for w in words), " ".join(lemmas),
+            e - b, int(toks[b]["token_id"]), int(toks[e - 1]["token_id"]),
+            int(toks[b]["offset_begin"]), int(toks[e - 1]["offset_end"]),
+        ))
+
+
+def _mine_batches_ref(batches):
+    import pandas as pd
+
+    for pdf in batches:
+        out = []
+        for doc_id, sent_id, toks in zip(
+            pdf["doc_id"].values, pdf["sentence_id"].values, pdf["toks"].values
+        ):
+            _mine_sentence_ref(doc_id, int(sent_id), toks, out)
+        yield pd.DataFrame(out, columns=_CAND_COLS)
+
+
+EDGE_DOCS = [
+    ("empty", ""),
+    ("blank", "  \n\t "),
+    ("null", None),
+    ("cjk", "東京 大阪。北京"),
+    ("no_noun", "Run quickly. It was very slowly."),
+    ("abbrev", "Mr. Smith moved 400 tonnes.\nDr. Jones of Acme Cargo Inc. said no."),
+]
+
+
+# the oracles run in Python workers, which cannot import this test module
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+
+def _parity_docs(spark):
+    from kargo_spark import corpus
+    from kargo_spark.synth import synth_documents
+
+    synth = corpus.docs_clean(synth_documents(spark, n_rows=40)).select("doc_id", "content")
+    edge = spark.createDataFrame(EDGE_DOCS, "doc_id string, content string")
+    return synth.unionByName(edge)
+
+
+def test_annotate_matches_three_step_path(spark):
+    """tokenize and mine_candidates over the one annotate pass give exactly
+    the rows of the old annotate -> regroup -> mine path, with input
+    batches small enough that documents straddle them."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        docs = _parity_docs(spark)
+        want_toks = docs.mapInPandas(_annotate_batches_ref, nlp.TOKENS_SCHEMA)
+        want_cands = nlp.sentences_with_tokens(want_toks).mapInPandas(
+            _mine_batches_ref, C.CANDIDATES_SCHEMA
+        )
+        ann = nlp.annotate(docs)
+        got_toks = nlp.token_rows(ann)
+        got_cands = C.mine_candidates(ann)
+        assert got_toks.schema == nlp.tokenize(docs).schema
+        assert got_toks.schema.simpleString() == want_toks.schema.simpleString()
+        assert got_cands.schema.simpleString() == want_cands.schema.simpleString()
+        want_t, got_t = want_toks.collect(), got_toks.collect()
+        want_c, got_c = want_cands.collect(), got_cands.collect()
+    finally:
+        spark.conf.set(key, old)
+    assert sorted(got_t) == sorted(want_t)
+    assert sorted(got_c) == sorted(want_c)
+    by_doc = {r["doc_id"] for r in got_t}
+    assert {"empty", "blank", "null"}.isdisjoint(by_doc)
+    assert {"cjk", "no_noun", "abbrev"} <= by_doc
+    assert any(r["doc_id"] == "cjk" for r in got_c)
+    # the first sentence ("Run quickly.") has no noun, so no candidate
+    assert not [r for r in got_c if r["doc_id"] == "no_noun" and r["sentence_id"] == 1]
+    assert len(got_c) > 100

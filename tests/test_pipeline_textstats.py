@@ -80,13 +80,15 @@ def test_size_bucketed_preserves_rows(spark):
     assert out.rdd.getNumPartitions() == 4
 
 
-def test_python_stages_run_one_task_per_core(spark):
+def test_python_stages_run_one_task_per_core(spark, tmp_path):
     """size_bucketed defaults to defaultParallelism (not the shuffle
     partition count), sentences_with_tokens regroups through one doc-keyed
-    exchange at that width, and tokenize over size_bucketed runs exactly
-    one Python task per core."""
+    exchange at that width, tokenize and annotate over size_bucketed run
+    exactly one Python task per core, and the candidates stage over a
+    stored docs table plans no exchange but size_bucketed's."""
     import re
 
+    from kargo_spark import candidates as C
     from kargo_spark import corpus, nlp
 
     n = spark.sparkContext.defaultParallelism
@@ -116,6 +118,26 @@ def test_python_stages_run_one_task_per_core(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     # the last stage reads the size_bucketed exchange and runs tokenize
     assert st.getStageInfo(max(stages)).numTasks == n
+
+    sc.setJobGroup("test_one_task_per_core_annotate", "annotate over size_bucketed")
+    try:
+        nlp.annotate(size_bucketed(docs, "content")).write.format("noop").mode("overwrite").save()
+        stages = [s for j in st.getJobIdsForGroup("test_one_task_per_core_annotate")
+                  for s in st.getJobInfo(j).stageIds]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert st.getStageInfo(max(stages)).numTasks == n
+
+    docs.write.parquet(str(tmp_path / "docs_clean"))
+    stored = spark.read.parquet(str(tmp_path / "docs_clean"))
+    cands = C.filter_candidates(
+        C.mine_candidates(nlp.annotate(size_bucketed(stored, "content"))),
+        stopwords=C.DEFAULT_STOPWORDS,
+    )
+    plan = cands._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1
+    parts = re.findall(r"hashpartitioning\((.*?)\)", plan)
+    assert len(parts) == 1 and re.fullmatch(rf"__size_bucket#\d+L, __salt#\d+L, {n}", parts[0])
 
 
 def test_pipeline_triples_invariant_to_input_layout(spark, tmp_path):

@@ -43,7 +43,11 @@ texts = st.text(
 @settings(max_examples=50, deadline=None)
 @given(texts)
 def test_tokenizer_offsets_always_roundtrip(text):
-    rows = _annotate_doc("d", text)
+    rows = [
+        ("d", sent[0], *tok)
+        for sent in _annotate_doc(text)
+        for tok in zip(*sent[1:])
+    ]
     for r in rows:
         assert text[r[6]:r[7]] == r[3]  # offsets slice back to the word
     # token ids 1-based consecutive within each sentence

@@ -16,8 +16,9 @@ from kargo_spark.synth import synth_documents
 @pytest.fixture(scope="module")
 def staged(spark):
     docs = corpus.docs_clean(synth_documents(spark, n_rows=20))
-    toks = nlp.tokenize(docs)
-    cands = C.filter_candidates(C.mine_candidates(nlp.sentences_with_tokens(toks)))
+    ann = nlp.annotate(docs)
+    toks = nlp.token_rows(ann)
+    cands = C.filter_candidates(C.mine_candidates(ann))
     return docs, toks, cands
 
 

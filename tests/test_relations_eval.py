@@ -15,8 +15,8 @@ def _stage(spark):
                "The pharma shipment reached the cool chain terminal."),
     ]
     df = spark.createDataFrame(docs, "doc_id string, content string")
-    toks = nlp.tokenize(df)
-    sents = nlp.sentences_with_tokens(toks)
+    sents = nlp.annotate(df)
+    toks = nlp.token_rows(sents)
     cands = C.mine_candidates(sents)
     df_tab, n = weighting.document_frequency(cands)
     topk = weighting.top_k_terms(weighting.tfidf_scores(cands, df_tab, n), k=10)

@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 import math
+import sys
 
 import numpy as np
+from pyspark import cloudpickle
 from pyspark.sql import functions as F
 
 from kargo_spark import candidates as C
@@ -26,8 +28,8 @@ DOCS = [
 
 def _cands(spark):
     df = spark.createDataFrame(DOCS, "doc_id string, content string")
-    toks = nlp.tokenize(df)
-    return toks, C.mine_candidates(nlp.sentences_with_tokens(toks))
+    ann = nlp.annotate(df)
+    return nlp.token_rows(ann), C.mine_candidates(ann)
 
 
 def test_document_frequency_exact(spark):
@@ -221,3 +223,104 @@ def test_yake_batch_equals_per_doc(spark):
     assert list(a["doc_id"]) == list(b["doc_id"])
     assert list(a["ngram"]) == list(b["ngram"])
     assert np.allclose(a["score"], b["score"], rtol=1e-9, atol=1e-12)
+
+
+# --- ranker parity: the applyInArrow kernel against the former per-doc
+# pandas ranker, kept here as the oracle --------------------------------
+
+def _doc_rank_ref(pdf, window, position_bias, iters=50, tol=1e-6):
+    import pandas as pd
+
+    from kargo_spark.graph_rank import _window_graph
+
+    doc_id = pdf["doc_id"].iloc[0]
+    toks = pdf.sort_values(["sentence_id", "token_id"])
+    mask = toks["pos"].isin({"NOUN", "PROPN", "ADJ", "NUM"}).values
+    words = toks["word"].str.lower().values
+    seq_words = words[mask]
+    seq_glob_idx = np.flatnonzero(mask)
+    vocab = {w: i for i, w in enumerate(pd.unique(seq_words))}
+    adj, pers = _window_graph(seq_words, seq_glob_idx, vocab, window)
+    ranks = _pagerank_numpy(adj, pers if position_bias else None, iters=iters, tol=tol)
+    wscore = {w: ranks[i] for w, i in vocab.items()}
+    out = []
+    for ngram, term in (
+        pdf[["ngram", "term"]].dropna().drop_duplicates("ngram").itertuples(index=False)
+    ):
+        s = sum(wscore.get(w, 0.0) for w in term.split(" "))
+        out.append((doc_id, ngram, term, float(s)))
+    return pd.DataFrame(out, columns=["doc_id", "ngram", "term", "score"])
+
+
+# the oracle runs in Python workers, which cannot import this test module
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+
+def _rank_ref(tokens, cands, position_bias, window=10, iters=50, tol=1e-6):
+    from kargo_spark.graph_rank import _rank_input, _rank_schema
+    from kargo_spark.skew import widen
+
+    return widen(_rank_input(tokens, cands), "doc_id").groupBy("doc_id").applyInPandas(
+        lambda pdf: _doc_rank_ref(pdf, window, position_bias, iters=iters, tol=tol),
+        _rank_schema(tokens),
+    )
+
+
+def _scores(df):
+    return {(r["doc_id"], r["ngram"]): (r["term"], r["score"]) for r in df.collect()}
+
+
+def test_rankers_match_pandas_oracle_exactly(spark):
+    """single_rank and position_rank give the pandas ranker's rows and
+    bit-identical scores (==, not approx) on synthetic docs, a doc with
+    candidates but no candidate-POS token, and Arrow batches of 7 rows so
+    that every doc straddles batches."""
+    from kargo_spark import corpus
+    from kargo_spark.synth import synth_documents
+
+    docs = corpus.docs_clean(synth_documents(spark, n_rows=30)).select("doc_id", "content")
+    ann = nlp.annotate(docs)
+    toks, cands = nlp.token_rows(ann), C.mine_candidates(ann)
+    verbs = spark.createDataFrame(
+        [("verbs", 1, 1, "moved", "moved", "VERB", 0, 5, "O", "root", 0)], nlp.TOKENS_SCHEMA
+    )
+    toks = toks.unionByName(verbs)
+    cands = cands.unionByName(spark.createDataFrame(
+        [("verbs", 1, "moved", "moved", 1, 1, 1, 0, 5)], C.CANDIDATES_SCHEMA
+    ))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got_sr, want_sr = _scores(single_rank(toks, cands)), _scores(_rank_ref(toks, cands, False))
+        got_pr, want_pr = _scores(position_rank(toks, cands)), _scores(_rank_ref(toks, cands, True))
+    finally:
+        spark.conf.set(key, old)
+    assert got_sr == want_sr
+    assert got_pr == want_pr
+    assert got_sr[("verbs", "moved")] == ("moved", 0.0)
+    # three-word terms make the summation order observable
+    assert any(len(t.split(" ")) >= 3 and s > 0 for t, s in got_pr.values())
+    assert got_pr != got_sr
+
+
+def test_single_rank_long_doc_id_matches_pandas_oracle(spark):
+    """The `q_singlerank` query's shape: long doc ids, one sentence, 0-based
+    token ids, every token a NOUN, pinned iterations."""
+    docs = spark.createDataFrame(
+        [(7, "cargo hub moves cargo to the hub daily and the cargo hub grows"),
+         (11, "pharma chain keeps pharma cold along the chain")],
+        "doc_id long, text string",
+    )
+    tok = docs.select("doc_id", F.posexplode(F.split("text", " ")).alias("i", "word")).select(
+        "doc_id", F.lit(1).alias("sentence_id"), F.col("i").alias("token_id"), "word",
+        F.lit("NOUN").alias("pos"),
+    )
+    cands = tok.filter(F.length("word") >= 3).select(
+        "doc_id", F.col("word").alias("lemma_term"), F.col("word").alias("term")
+    )
+    got = single_rank(tok, cands, window=10, iters=3, tol=0.0)
+    assert got.schema["doc_id"].dataType.simpleString() == "bigint"
+    want = _rank_ref(tok, cands, False, iters=3, tol=0.0)
+    assert _scores(got) == _scores(want)
+    assert {d for d, _ in _scores(got)} == {7, 11}

@@ -5,6 +5,8 @@ plans/r06/<query>_<tag>.txt (judge evidence for OPTIMIZATION_r06.md).
 Usage: python tools/capture_plans.py <tag> [query ...]
 Defaults to the bench HEADLINE set. Uses sf0.001 so eager side jobs
 (pipeline counts, store writes) stay cheap; plan SHAPE is sf-invariant.
+Prints, per query, the counts of exchanges, Python evaluation nodes,
+partitionings and Python map / grouped-map operators in its plan.
 """
 
 from __future__ import annotations
@@ -44,6 +46,10 @@ def main() -> None:
             f"arroweval={txt.count('ArrowEvalPython')} "
             f"roundrobin={txt.count('RoundRobinPartitioning')} "
             f"hashpart={txt.count('hashpartitioning')} "
+            f"mapinarrow={txt.count('MapInArrow')} "
+            f"mapinpandas={txt.count('MapInPandas')} "
+            f"groupsinarrow={txt.count('FlatMapGroupsInArrow')} "
+            f"groupsinpandas={txt.count('FlatMapGroupsInPandas')} "
             f"-> {path}"
         )
 
