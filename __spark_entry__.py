@@ -146,8 +146,8 @@ def _unigram_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     without the persist each consumer re-scans and re-explodes the
     documents parquet (guide §1.2: remove repeated passes before tuning
     anything else). The eager collect inside document_frequency doubles
-    as the materialization barrier (same pattern as
-    pipeline.triples_chain), and CacheManager's canonical-plan matching
+    as the materialization barrier (same pattern as the pipeline's
+    df_counts stage), and CacheManager's canonical-plan matching
     shares this cache across suite queries that embed tf-idf twice
     (eval_suite's precision + recall parts)."""
     wp = _word_positions(spark, sf_dir).filter(F.length("word") >= 3)

@@ -82,7 +82,3 @@ def cosine_expr(a, b):
     na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
     nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
     return dot / (na * nb)
-
-
-def dot_expr(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)

@@ -29,8 +29,6 @@ from pyspark.sql import functions as F
 
 from .skew import widen
 
-RANK_SCHEMA = "doc_id string, ngram string, term string, score double"
-
 
 def _rank_schema(df) -> str:
     """Output schema with the caller's doc_id type (string corpus ids vs

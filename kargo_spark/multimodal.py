@@ -19,11 +19,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id long, kind string, fmt string, width int, height int, "
-    "duration_ms int, data binary"
-)
-
 FEATURES_SCHEMA = (
     "media_id long, kind string, n_bytes long, sha string, feat array<float>"
 )

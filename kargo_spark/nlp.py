@@ -42,7 +42,6 @@ TOKENS_SCHEMA = (
     "ner string, deprel string, deprel_head_id int"
 )
 
-_SENT_BREAK = re.compile(r"(?<=[.!?])\s+|\n+")
 _TOKEN = re.compile(r"[A-Za-z0-9_]+|[^\sA-Za-z0-9_]")
 
 _FUNCTION_WORDS = {

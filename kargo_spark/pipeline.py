@@ -29,9 +29,6 @@ _METRICS_SCHEMA = pa.schema([
 ])
 
 
-RANKERS = ("tfidf", "kpminer", "yake", "singlerank", "positionrank")
-
-
 def rank_scores(ranker: str, tokens: DataFrame, cands: DataFrame,
                 df_tab: DataFrame, n_docs: int) -> DataFrame:
     from . import graph_rank
@@ -52,29 +49,18 @@ def rank_scores(ranker: str, tokens: DataFrame, cands: DataFrame,
 def triples_chain(
     documents: DataFrame, ranker: str = "tfidf", n_terms: int = 15
 ) -> tuple[DataFrame, list[DataFrame]]:
-    """The composed docs→triples chain as ONE lazy DAG — no checkpoints,
-    persists only at the two nodes consumed twice (annotated feeds
-    candidates and pairs; candidates feeds df/scores/mentions). Used by
-    the throughput bench and the streaming micro-batch sink.
+    """The docs→triples chain as ONE lazy DAG: ``run_pipeline`` in memory,
+    without clustering or linking. Used by the throughput bench, the
+    streaming micro-batch sinks and ``ingest_increment``.
 
     Returns (triples, cached); the caller unpersists ``cached`` after its
     terminal action.
     """
-    dc = corpus.docs_clean(documents)
-    annotated = nlp.annotate(size_bucketed(dc, "content")).persist()
-    tokens = nlp.token_rows(annotated)
-    cands = C.filter_candidates(C.mine_candidates(annotated)).persist()
-    # document_frequency's scalar collect is deliberate: it materializes
-    # the cands cache BEFORE the broadcast-subquery jobs fire. A fully
-    # lazy N (1-row broadcast DF) makes the df_tab and N broadcast jobs
-    # race to recompute the whole uncached tokenize chain concurrently —
-    # measured 8x slower, not faster.
-    df_tab, n_docs = weighting.document_frequency(cands)
-    scores = rank_scores(ranker, tokens, cands, df_tab, n_docs)
-    topk = weighting.top_k_terms(scores, k=n_terms)
-    ments = relations.mentions(cands, topk)
-    prs = relations.pairs(ments, annotated)
-    return relations.triples_from_pairs(prs), [annotated, cands]
+    out = run_pipeline(
+        documents.sparkSession, documents, None, ranker=ranker, n_terms=n_terms,
+        cluster_relations=False, linking=False,
+    )
+    return out["triples"], [df for df in out.values() if df.is_cached]
 
 
 def run_pipeline(
@@ -94,7 +80,9 @@ def run_pipeline(
     graph_prefix: str | None = None,
     graph_max_mid_degree: int | None = None,
 ) -> dict[str, DataFrame]:
-    """Run the full DAG; returns every stage table by name.
+    """Run the full DAG; returns every stage table by name. In memory
+    (``workdir=None``) every frame it persists is among them, so the
+    caller can unpersist the ``is_cached`` ones after its last action.
 
     ``scalable_clustering=None`` (default) auto-switches: exact DBSCAN is a
     single-task O(n²) parity oracle, safe only for small pair-vector
@@ -138,6 +126,12 @@ def run_pipeline(
         "candidates",
         lambda: C.filter_candidates(C.mine_candidates(annotated), stopwords=C.DEFAULT_STOPWORDS),
     )
+    # document_frequency's eager scalar collect is deliberate even though
+    # its N is dropped: in memory it materializes the candidates cache
+    # BEFORE the rankers' broadcast-subquery jobs fire. A fully lazy N
+    # (1-row broadcast DF) makes the df_tab and N broadcast jobs race to
+    # recompute the whole uncached tokenize chain concurrently — measured
+    # 8x slower, not faster. N itself is the docs_clean count.
     df_tab = ck.run_stage(
         "df_counts", lambda: weighting.document_frequency(cands)[0],
         persist=False,
@@ -229,6 +223,7 @@ def run_pipeline(
 
     out = {
         "docs_clean": docs_clean,
+        "annotated": annotated,
         "tokens": tokens,
         "candidates": cands,
         "df_counts": df_tab,
@@ -243,6 +238,9 @@ def run_pipeline(
             pa.Table.from_pylist(ck.metrics(), schema=_METRICS_SCHEMA)
         ),
     }
+    if cluster_relations:
+        out["pair_vectors"] = vectors
+        out["clusters"] = clusters
     if linking:
         out["entities"] = entities
         out["links"] = links

@@ -148,6 +148,47 @@ def stateful_sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame
     )
 
 
+def _commit_batch_once(batch_df: DataFrame, batch_id: int, table_root: str,
+                       checkpoint_dir: str, ranker: str, n_terms: int,
+                       columns: tuple[str, ...] = ()) -> bool:
+    """Run the docs→triples chain on one micro-batch and append its triples
+    to the Iceberg-lite table at ``table_root`` as a snapshot tagged
+    ``(checkpoint, batch_id)``. Returns False, committing nothing, when
+    that tag is already in the table's history (a replay after restart);
+    ``columns`` selects the committed columns (all when empty)."""
+    from .iceberg_lite import IcebergLiteTable
+    from .pipeline import triples_chain
+
+    tbl = IcebergLiteTable(batch_df.sparkSession, table_root)
+
+    # idempotency key = (checkpoint, batch id), NOT the bare batch id:
+    # a different query instance (fresh checkpoint, or a second stream
+    # feeding the same table) numbers its batches from 0 again with
+    # DIFFERENT data — only a replay of THIS query may be skipped
+    committed = {
+        (s["summary"].get("streaming_checkpoint"), s["summary"].get("streaming_batch_id"))
+        for s in tbl.snapshots()
+    }
+    if (checkpoint_dir, batch_id) in committed:
+        return False
+    triples, cached = triples_chain(batch_df, ranker=ranker, n_terms=n_terms)
+    try:
+        tbl.commit(
+            triples.select(*columns) if columns else triples,
+            operation="append" if tbl.exists() else "overwrite",
+            summary_extra={
+                "streaming_batch_id": batch_id,
+                "streaming_checkpoint": checkpoint_dir,
+            },
+        )
+    finally:
+        # release the chain's caches even when the commit fails —
+        # Spark retries the batch and re-persists fresh copies
+        for df in cached:
+            df.unpersist()
+    return True
+
+
 def streaming_triples(docs_stream: DataFrame, table_root: str, checkpoint_dir: str,
                       ranker: str = "tfidf", n_terms: int = 15):
     """Continuous KG construction: each micro-batch of source documents
@@ -161,36 +202,8 @@ def streaming_triples(docs_stream: DataFrame, table_root: str, checkpoint_dir: s
     Returns the started StreamingQuery (availableNow trigger: drains all
     pending input, then stops — call .awaitTermination()).
     """
-    from .iceberg_lite import IcebergLiteTable
-    from .pipeline import triples_chain
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        tbl = IcebergLiteTable(batch_df.sparkSession, table_root)
-        # idempotency key = (checkpoint, batch id), NOT the bare batch id:
-        # a different query instance (fresh checkpoint, or a second stream
-        # feeding the same table) numbers its batches from 0 again with
-        # DIFFERENT data — only a replay of THIS query may be skipped
-        committed = {
-            (s["summary"].get("streaming_checkpoint"), s["summary"].get("streaming_batch_id"))
-            for s in tbl.snapshots()
-        }
-        if (checkpoint_dir, batch_id) in committed:
-            return  # replay after restart: already durable
-        triples, cached = triples_chain(batch_df, ranker=ranker, n_terms=n_terms)
-        try:
-            tbl.commit(
-                triples,
-                operation="append" if tbl.exists() else "overwrite",
-                summary_extra={
-                    "streaming_batch_id": batch_id,
-                    "streaming_checkpoint": checkpoint_dir,
-                },
-            )
-        finally:
-            # release the chain's caches even when the commit fails —
-            # Spark retries the batch and re-persists fresh copies
-            for df in cached:
-                df.unpersist()
+        _commit_batch_once(batch_df, batch_id, table_root, checkpoint_dir, ranker, n_terms)
 
     return (
         docs_stream.writeStream.foreachBatch(process)
@@ -239,36 +252,16 @@ def streaming_graph_ingest(
     most K-1 batches (call ``refresh_graph_serving`` to force a sync,
     e.g. after an availableNow drain).
     """
-    from .iceberg_lite import IcebergLiteTable
-    from .pipeline import triples_chain
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        tbl = IcebergLiteTable(spark, ledger_root)
-        committed = {
-            (s["summary"].get("streaming_checkpoint"), s["summary"].get("streaming_batch_id"))
-            for s in tbl.snapshots()
-        }
-        if (checkpoint_dir, batch_id) in committed:
+        if not _commit_batch_once(batch_df, batch_id, ledger_root, checkpoint_dir, ranker,
+                                  n_terms, ("subj", "pred", "obj", "support")):
             # replay after a crash: the ledger has the batch, but the
             # serving swap may be torn at any point — rebuild. Every
             # crash funnels through here (the stream never acked the
             # batch), so the coverage marker is always repaired.
             refresh_graph_serving(spark, graph_prefix, ledger_root)
             return
-        triples, cached = triples_chain(batch_df, ranker=ranker, n_terms=n_terms)
-        try:
-            tbl.commit(
-                triples.select("subj", "pred", "obj", "support"),
-                operation="append" if tbl.exists() else "overwrite",
-                summary_extra={
-                    "streaming_batch_id": batch_id,
-                    "streaming_checkpoint": checkpoint_dir,
-                },
-            )
-        finally:
-            for df in cached:
-                df.unpersist()
         _maybe_refresh(spark, graph_prefix, ledger_root, max(refresh_every, 1))
 
     return (

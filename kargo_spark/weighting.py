@@ -31,9 +31,8 @@ def document_frequency(
     ``(df_tab, None)`` — for consumers that only need the DF table (r06:
     the collect is a full scan+explode+countDistinct job, wasted when the
     scalar is discarded). Callers that rely on the collect as a cache
-    materialization barrier (pipeline.triples_chain's df_counts stage,
-    the ranker queries over the persisted candidate table) must keep the
-    default.
+    materialization barrier (the pipeline's df_counts stage, the ranker
+    queries over the persisted candidate table) must keep the default.
     """
     df_tab = (
         cands.groupBy(F.col(term_col).alias("ngram"))
@@ -61,6 +60,8 @@ def tfidf_scores(cands: DataFrame, df_tab: DataFrame, n_docs: int) -> DataFrame:
     most), far smaller than the candidate-occurrence table, so the join is
     map-side at any corpus scale. Unseen n-grams get df=1 (pke fallback).
 
+    In ``run_pipeline`` (and so ``triples_chain``), N is the docs_clean
+    count: every cleaned doc, including docs that mined no candidate.
     ``n_docs`` is deliberately a SCALAR: a lazy 1-row-DataFrame N was
     tried and reverted — broadcast subqueries run as separate pre-jobs
     that race to recompute an uncached upstream chain (measured 8x
@@ -92,7 +93,8 @@ def kpminer_scores(
     within ``cutoff`` chars; score = tf * boost * idf where the boost
     factor B = min(|N_d| / (|P_d| * alpha), sigma) uses doc-local counts
     (N_d = all candidate occurrences, P_d = multi-word ones) — computed
-    with a window, no extra shuffle beyond the tf groupBy.
+    with a window, no extra shuffle beyond the tf groupBy. In
+    ``run_pipeline``, ``n_docs`` (the idf's N) is the docs_clean count.
     """
     tf = tf_table(cands)
     nw = cands.groupBy("doc_id").agg(
@@ -118,8 +120,6 @@ def kpminer_scores(
 
 
 # --- YAKE (doc-local statistical features, applyInPandas) -----------------
-
-YAKE_SCHEMA = "doc_id string, ngram string, term string, score double"
 
 YAKE_WINDOW = 2  # pke YAKE default co-occurrence window
 

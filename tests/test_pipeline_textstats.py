@@ -162,6 +162,31 @@ def test_pipeline_triples_invariant_to_input_layout(spark, tmp_path):
     assert got[0] == got[1]
 
 
+def test_in_memory_chain_releases_every_cache(spark):
+    """Every frame an in-memory ``run_pipeline`` persists is in its output
+    dict, so unpersisting the cached outputs (what ``triples_chain``
+    hands back) leaves no persisted RDD behind, call after call."""
+    from kargo_spark.pipeline import triples_chain
+
+    jsc = spark.sparkContext._jsc
+    start = jsc.getPersistentRDDs().size()
+    docs = synth_documents(spark, n_rows=30, seed=11)
+    for _ in range(3):
+        for ranker in ("tfidf", "positionrank"):
+            out = run_pipeline(spark, docs, None, ranker=ranker, linking=False,
+                               cluster_relations=False)
+            assert out["triples"].count() > 0
+            for df in out.values():
+                if df.is_cached:
+                    df.unpersist()
+            assert jsc.getPersistentRDDs().size() == start, ranker
+        triples, cached = triples_chain(docs)
+        assert triples.count() > 0
+        for df in cached:
+            df.unpersist()
+        assert jsc.getPersistentRDDs().size() == start, "triples_chain"
+
+
 def test_salted_agg_matches_plain(spark):
     df = spark.createDataFrame(
         [("k1", 1.0)] * 50 + [("k2", 2.0)] * 5, "k string, v double"
